@@ -76,35 +76,15 @@ def l2_norm(a: Column | str) -> Column:
     return F.sqrt(dot_product(a, a))
 
 
-def cosine_similarity(
-    a: Column | str, b: Column | str, dim: int | None = None
-) -> Column:
+def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     """cos(a,b); 0.0 when either vector is all-zero (defined, not NaN).
 
-    ``dim`` (r13, VERDICT r12 item 6): when the vector length is
-    statically known, pass it to run the three dot products through
-    the unrolled codegen form (:func:`dot_product_fixed`) instead of
-    interpreted ``zip_with``/``aggregate`` lambdas. Bit-identical to
-    the HOF path on length-``dim`` inputs: the same three float64
-    left-to-right folds feed the same ``when(denom > 0)`` guard, and
-    a NULL vector falls through to 0.0 identically (NULL ``denom >
-    0`` is NULL → ``otherwise``). See the :func:`dot_product` NOTE
-    for the short/long-input divergence cases — callers must know
-    their vectors are exactly ``dim`` long (pinned by
-    tests/test_r13_optimizations.py).
-
-    USE ONLY FOR SMALL ``dim``: the r13 A/B measured the 64-dim
-    unroll as a 3-4× REGRESSION on the similarity gates (the 3×64-
-    term tree is ~1200 expression nodes per cosine; the winning PQ
-    precedent unrolled dsub=2). tools/r13_ab/ivf_dim_ab.py carries
-    the numbers; no shipped caller passes dim=64."""
-    if dim is not None:
-        denom_f = F.sqrt(dot_product_fixed(a, a, dim)) * F.sqrt(
-            dot_product_fixed(b, b, dim)
-        )
-        return F.when(
-            denom_f > 0, dot_product_fixed(a, b, dim) / denom_f
-        ).otherwise(F.lit(0.0))
+    Stays on the ``zip_with``/``aggregate`` form even for statically
+    known lengths: the r13 A/B measured a 64-dim unroll through
+    :func:`dot_product_fixed` 3-4× SLOWER on the similarity gates
+    (the 3×64-term tree is ~1200 expression nodes per cosine;
+    OPTIMIZATION_r13.md) — the fixed forms win only for tiny widths
+    such as PQ's subspaces."""
     denom = l2_norm(a) * l2_norm(b)
     return F.when(denom > 0, dot_product(a, b) / denom).otherwise(F.lit(0.0))
 

@@ -27,7 +27,8 @@ families, bitwise ops for SimHash — zero Python in the row path.
 
 Skew note (at scale): a degenerate shingle/band shared by millions of
 docs creates a hot join key. ``max_bucket`` drops pathological buckets
-(standard practice; logged via the returned stats when callers ask).
+(standard practice); for the LSH family that guard is one helper,
+:func:`_bucket_pairs`.
 """
 
 from __future__ import annotations
@@ -423,6 +424,185 @@ def drop_near_duplicates(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
 
 
 # --------------------------------------------------------------------------
+# hash-bucket pairing: one policy for the whole LSH family
+# --------------------------------------------------------------------------
+
+def _band(
+    sigs: DataFrame, id_col: str, num_perm: int, bands: int, *carry: str
+) -> DataFrame:
+    """(id, *carry, _band, _bh): one row per (doc, minhash band).
+
+    rows-per-band r = num_perm/bands; the bucket key is (band index,
+    xxhash64 of the band's r signature values), so all bands go
+    through ONE exchange."""
+    if num_perm % bands:
+        raise ValueError("num_perm must be divisible by bands")
+    r = num_perm // bands
+    band_cols = F.array(*[
+        F.struct(
+            F.lit(j).alias("band"),
+            F.xxhash64(*[F.col(f"h{j * r + i}") for i in range(r)]).alias("bh"),
+        )
+        for j in range(bands)
+    ])
+    return (
+        sigs.select(id_col, *carry, F.explode(band_cols).alias("_b"))
+        .select(
+            id_col, *carry,
+            F.col("_b.band").alias("_band"), F.col("_b.bh").alias("_bh"),
+        )
+    )
+
+
+def _bucket_pairs(
+    banded: DataFrame,
+    keys: list[str],
+    member: Column,
+    max_bucket: int | None,
+    having: Column | None = None,
+    names: tuple[str, str] = ("_a", "_b"),
+) -> DataFrame:
+    """Every ordered pair of ``member`` values — self-pairs included —
+    from the hash buckets of ``banded`` (rows sharing ``keys``), as
+    the two columns ``names``. Callers apply their own pair predicate
+    and dedup.
+
+    With ``max_bucket`` set, ONE groupBy(keys) collects each bucket's
+    members and pairs are exploded IN-PARTITION from the list (≤
+    max_bucket² rows per bucket, streamed through codegen). Buckets
+    outside ``[2, max_bucket]`` are dropped — the hot-bucket guard:
+    a popular band value cannot make the pair stage quadratic, at
+    the cost of the pairs whose every shared bucket is hot. An
+    optional aggregate ``having`` predicate prunes further buckets
+    before any pair work. The guard bounds pair work, NOT aggregation
+    state: a hot bucket's full member list is built before the size
+    filter drops it. Bounding that state (count first, then collect)
+    is ROADMAP item 3.
+
+    With ``max_bucket=None`` (no guard) the pairs come from a bucket
+    self-join instead: an unbounded bucket's member list is the
+    single-key skew the guard exists to prevent, while a join handles
+    it with spillable machinery. ``having`` is not applied there, so
+    the caller's pair predicate must imply it. This path is the
+    reference the guarded one is pinned against in the tests.
+    """
+    na, nb = names
+    if max_bucket is None:
+        a = banded.select(*keys, member.alias(na))
+        b = banded.select(*keys, member.alias(nb))
+        return a.join(b, keys).select(na, nb)
+    aggs = [F.collect_list(member).alias("_m")]
+    keep = (F.size("_m") >= 2) & (F.size("_m") <= max_bucket)
+    if having is not None:
+        aggs.append(having.alias("_having"))
+        keep = keep & F.col("_having")
+    buckets = banded.groupBy(*keys).agg(*aggs).filter(keep).select("_m")
+    return (
+        buckets.select(F.explode("_m").alias(na), "_m")
+        .select(na, F.explode("_m").alias(nb))
+    )
+
+
+def _hamming_pairs(
+    sigs: DataFrame,
+    id_col: str,
+    hash_col: str,
+    nbits: int,
+    bands: int,
+    max_hamming: int,
+    max_bucket: int | None,
+) -> DataFrame:
+    """(id_a < id_b, hamming): pairs of ``nbits``-bit hashes within
+    ``max_hamming`` bits. The hash splits into ``bands`` slices of
+    nbits//bands bits; a pair sharing any whole slice is a candidate
+    (pigeonhole: hamming < bands ⇒ some slice is equal), verified by
+    ``bit_count(xor)``."""
+    width = nbits // bands
+    mask = (1 << width) - 1
+    slices = F.array(*[
+        F.struct(
+            F.lit(c).alias("band"),
+            F.shiftrightunsigned(F.col(hash_col), c * width)
+            .bitwiseAND(F.lit(mask).cast("long"))
+            .alias("bv"),
+        )
+        for c in range(bands)
+    ])
+    banded = sigs.select(
+        id_col, hash_col, F.explode(slices).alias("_c")
+    ).select(
+        id_col, hash_col,
+        F.col("_c.band").alias("_band"), F.col("_c.bv").alias("_bv"),
+    )
+    member = F.struct(F.col(id_col).alias("_i"), F.col(hash_col).alias("_s"))
+    return (
+        _bucket_pairs(banded, ["_band", "_bv"], member, max_bucket)
+        .filter(F.col("_a._i") < F.col("_b._i"))
+        .select(
+            F.col("_a._i").alias("id_a"),
+            F.col("_b._i").alias("id_b"),
+            F.bit_count(F.col("_a._s").bitwiseXOR(F.col("_b._s"))).alias("hamming"),
+        )
+        .distinct()
+        .filter(F.col("hamming") <= max_hamming)
+    )
+
+
+def _verify_jaccard(
+    df: DataFrame,
+    cand: DataFrame,
+    id_col: str,
+    text_col: str,
+    k: int,
+    threshold: float,
+) -> DataFrame:
+    """(id_a, id_b, jaccard): the ``cand`` pairs whose exact k-shingle
+    Jaccard is at least ``threshold``.
+
+    Candidate-pruned: the doc table is semi-joined to the broadcast
+    candidate ids BEFORE shingling, so the re-scan tokenizes only
+    candidate docs and its collect_set shuffle is candidate-bounded;
+    Jaccard is then ``array_intersect`` over the two hash sets —
+    never a re-shuffle of the full exploded shingle table. Jaccard
+    over 64-bit shingle hashes equals Jaccard over shingle strings up
+    to xxhash64 collisions (~|doc|²/2⁶⁵ per doc — negligible).
+    ``cand`` is read twice (id pruning + the verify join), so callers
+    pass it persisted."""
+    ids = (
+        cand.select(F.col("id_a").alias(id_col))
+        .union(cand.select(F.col("id_b").alias(id_col)))
+        .distinct()
+    )
+    cand_docs = df.join(F.broadcast(ids), id_col, "left_semi")
+    # need feeds BOTH verify branches (sa, sb); persist so the
+    # candidate-doc re-tokenize runs once, not per branch — the same
+    # two-branch recompute class measured in triangle_count's
+    # orientation (AQE does not reliably reuse the identical
+    # subtree). Candidate-bounded rows; released with clearCache.
+    need = (
+        _hashed_shingle_table(cand_docs, id_col, text_col, k)
+        .groupBy(id_col)
+        .agg(F.collect_set(F.col("_sh")).alias("_set"))
+        .persist()
+    )
+    sa = need.select(F.col(id_col).alias("id_a"), F.col("_set").alias("_sa"))
+    sb = need.select(F.col(id_col).alias("id_b"), F.col("_set").alias("_sb"))
+    inter = F.size(F.array_intersect("_sa", "_sb"))
+    return (
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn("_i", inter)
+        .withColumn(
+            "jaccard",
+            F.col("_i").cast("double")
+            / (F.size("_sa") + F.size("_sb") - F.col("_i")).cast("double"),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
+# --------------------------------------------------------------------------
 # MinHash + LSH
 # --------------------------------------------------------------------------
 
@@ -469,77 +649,27 @@ def lsh_candidate_pairs(
     """Band the signature, bucket per band, emit distinct pairs.
 
     rows-per-band r = num_perm/bands; a pair lands in one bucket with
-    prob 1-(1-j^r)^b. The bucket key is (band index, band hash) so all
-    bands go through ONE exchange. ``max_bucket`` guards hot buckets.
+    prob 1-(1-j^r)^b. Pairing and the ``max_bucket`` hot-bucket guard
+    are :func:`_bucket_pairs` (members are bare ids, pairs id_a <
+    id_b).
 
-    Plan shape (r13 rewrite, VERDICT r12 item 2 — measured on the
-    500k bench corpus, tools/r13_ab/lsh_bucket_explode_ab.py): with
-    ``max_bucket`` set, ONE groupBy(_band, _bh) collects each
-    bucket's member ids and pairs are exploded IN-PARTITION from the
-    member list (id_a < id_b), replacing the r4 shape's [persist ×2 +
-    hot-count aggregate + anti-join + bucket self-join]. The hot
-    guard becomes the same size filter (2 ≤ size ≤ max_bucket —
-    identical pair set, 25,622/25,622 pairs equal in the A/B and
-    edge-pinned in tests). Candidate stage 2.96 → 2.61 s min and
-    faster in every interleaved round; full minhash_dedup 9.03 →
-    8.44 s min; and the two docs×bands cached tables disappear
-    (MEMORY: nothing pinned — this path has NO cache contract
-    anymore). The collect_list buffer per bucket is bounded by
-    ``max_bucket`` ids (8 KB at the default 1000), which is exactly
-    the guard's own bound; the pair explode streams ≤ max_bucket²
-    rows per bucket through codegen without materializing them.
-    Scale-checked at 2M docs where buckets are ~all singletons (the
-    adversarial shape for per-group array state): the isolated
-    candidate stage still wins every interleaved round (bucket mins
-    3.10 vs legacy 3.91 s; 102,494 pairs identical), and a
-    count-filter-then-join alternative measures consistently second
-    (tools/r13_ab/lsh_count_filter_ab.py keeps all three shapes).
-
-    With ``max_bucket=None`` (no hot guard) the r4 self-join path is
-    kept: an UNBOUNDED bucket's collect_list is the single-key skew
-    the guard exists to prevent, while a self-join handles it with
-    spillable join machinery. That path persists ``banded`` (two
-    join sides) and keeps the old cache contract: released by the
-    caller's ``spark.catalog.clearCache()`` or session end.
+    Measured (r13 bucket-collect rewrite of the r4 persist + hot-count
+    anti-join + self-join shape; numbers in OPTIMIZATION_r13.md, plan
+    node deltas checked against plans/r13/claims.json): identical
+    pair set, candidate stage 2.96 → 2.61 s and full minhash_dedup
+    9.03 → 8.44 s on the 500k bench corpus. At 2M docs, where buckets
+    are ~all singletons, it still wins every interleaved round (3.10
+    vs 3.91 s, 102,494 pairs identical), and a count-filter-then-join
+    alternative measures second (tools/r13_ab/lsh_count_filter_ab.py
+    keeps the shapes).
     """
-    if num_perm % bands:
-        raise ValueError("num_perm must be divisible by bands")
-    r = num_perm // bands
-    band_cols = F.array(*[
-        F.struct(
-            F.lit(j).alias("band"),
-            F.xxhash64(*[F.col(f"h{j * r + i}") for i in range(r)]).alias("bh"),
-        )
-        for j in range(bands)
-    ])
-    banded = (
-        signatures.select(id_col, F.explode(band_cols).alias("_b"))
-        .select(id_col, F.col("_b.band").alias("_band"), F.col("_b.bh").alias("_bh"))
-    )
-    if max_bucket is not None:
-        buckets = (
-            banded.groupBy("_band", "_bh")
-            .agg(F.collect_list(F.col(id_col)).alias("_ids"))
-            .filter(
-                (F.size("_ids") >= 2) & (F.size("_ids") <= max_bucket)
-            )
-            .select("_ids")
-        )
-        return (
-            buckets.select(F.explode("_ids").alias("id_a"), "_ids")
-            .select("id_a", F.explode("_ids").alias("id_b"))
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-    # unguarded path: self-join (spillable under single-bucket skew)
-    banded = banded.persist()
-    a = banded.select(F.col(id_col).alias("id_a"), "_band", "_bh")
-    b = banded.select(F.col(id_col).alias("id_b"), "_band", "_bh")
+    banded = _band(signatures, id_col, num_perm, bands)
     return (
-        a.join(b, ["_band", "_bh"])
+        _bucket_pairs(
+            banded, ["_band", "_bh"], F.col(id_col), max_bucket,
+            names=("id_a", "id_b"),
+        )
         .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
         .distinct()
     )
 
@@ -567,14 +697,7 @@ def minhash_dedup(
     verification needs sets only for docs that appear in a
     candidate pair (~5% there, and the fraction shrinks as the
     corpus grows past the duplicate clusters). Sets are instead
-    built in a SECOND, candidate-pruned pass: the doc table is
-    semi-joined to the broadcast candidate ids BEFORE shingling, so
-    the re-scan tokenizes only candidate docs and its collect_set
-    shuffle is candidate-bounded. Verification is then exact
-    Jaccard via ``array_intersect`` — never a re-shuffle of the
-    full exploded shingle table. Jaccard over 64-bit shingle hashes
-    equals Jaccard over shingle strings up to xxhash64 collisions
-    (~|doc|²/2⁶⁵ per doc — negligible).
+    built in a SECOND, candidate-pruned pass (:func:`_verify_jaccard`).
 
     The persisted signature table is session-cached (caller
     releases via ``spark.catalog.clearCache()`` if needed); its
@@ -602,40 +725,7 @@ def minhash_dedup(
     cand = lsh_candidate_pairs(
         sigs, id_col, num_perm, bands, max_bucket
     ).persist()
-    ids = (
-        cand.select(F.col("id_a").alias(id_col))
-        .union(cand.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    # Candidate-pruned set pass: semi-join the DOC table first so the
-    # explode + collect_set run over candidate docs only.
-    cand_docs = df.join(F.broadcast(ids), id_col, "left_semi")
-    # need feeds BOTH verify branches (sa, sb); persist so the
-    # candidate-doc re-tokenize runs once, not per branch — the same
-    # two-branch recompute class measured in triangle_count's
-    # orientation (AQE does not reliably reuse the identical
-    # subtree). Candidate-bounded rows; released with clearCache.
-    need = (
-        _hashed_shingle_table(cand_docs, id_col, text_col, k)
-        .groupBy(id_col)
-        .agg(F.collect_set(F.col("_sh")).alias("_set"))
-        .persist()
-    )
-    sa = need.select(F.col(id_col).alias("id_a"), F.col("_set").alias("_sa"))
-    sb = need.select(F.col(id_col).alias("id_b"), F.col("_set").alias("_sb"))
-    inter = F.size(F.array_intersect("_sa", "_sb"))
-    verified = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("_i", inter)
-        .withColumn(
-            "jaccard",
-            F.col("_i").cast("double")
-            / (F.size("_sa") + F.size("_sb") - F.col("_i")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    verified = _verify_jaccard(df, cand, id_col, text_col, k, threshold)
     return drop_near_duplicates(df, verified, id_col)
 
 
@@ -689,88 +779,15 @@ def simhash_pairs(
     """Pairs with hamming(simhash) ≤ max_hamming via chunk-equality LSH.
 
     Pigeonhole: ≤3 differing bits across 4 chunks ⇒ at least one
-    16-bit chunk identical — candidates are chunk-join matches,
-    verified exactly with ``bit_count(xor)``.
-
-    Plan shape (r13 — the lsh_candidate_pairs bucket-explode rewrite
-    applied to its structural twin; same guard semantics, identical
-    pair set pinned in tests/test_r13_optimizations.py): with
-    ``max_bucket`` set, ONE groupBy(_chunk, _cv) collects each
-    bucket's (id, simhash) members, buckets filtered to ``2 ≤ size ≤
-    max_bucket``, pairs exploded in-partition — replacing the r4/r5
-    shape's [persist ×2 + hot-count aggregate + anti-join +
-    self-join]. The member buffer is bounded by the guard (16 bytes ×
-    max_bucket). Measured (tools/r13_ab/simhash_bucket_ab.py, 500k
-    bench corpus, interleaved min-of-3): see the r13 ledger — the
-    candidate subtree drops both docs×chunks persists. NO cache
-    contract on this path.
-
-    With ``max_bucket=None`` the self-join path and its measured r5
-    persist placement remain (tools/simhash_persist_ab.py numbers:
-    post-anti-join persist 3.06 s vs 3.50 s without) — an unbounded
-    bucket's collect_list is exactly the skew the guard prevents, so
-    the unguarded path keeps spillable join machinery and the
-    caller-released ``clearCache()`` contract.
+    16-bit chunk identical — candidates are chunk-bucket matches,
+    verified exactly with ``bit_count(xor)`` (:func:`_hamming_pairs`;
+    pairing and the ``max_bucket`` hot-bucket guard are
+    :func:`_bucket_pairs`). Measured against the r4/r5 persist +
+    anti-join + self-join shape in OPTIMIZATION_r13.md (simhash pairs
+    stage 4.23 → 1.14 s, identical pair set).
     """
-    width = 64 // chunks
-    mask = (1 << width) - 1
-    chunk_cols = F.array(*[
-        F.struct(
-            F.lit(c).alias("chunk"),
-            F.shiftrightunsigned(F.col("simhash"), c * width)
-            .bitwiseAND(F.lit(mask).cast("long"))
-            .alias("cv"),
-        )
-        for c in range(chunks)
-    ])
-    chunked = signatures.select(
-        id_col, "simhash", F.explode(chunk_cols).alias("_c")
-    ).select(
-        id_col, "simhash",
-        F.col("_c.chunk").alias("_chunk"), F.col("_c.cv").alias("_cv"),
-    )
-    if max_bucket is not None:
-        buckets = (
-            chunked.groupBy("_chunk", "_cv")
-            .agg(
-                F.collect_list(
-                    F.struct(F.col(id_col).alias("_i"), F.col("simhash").alias("_s"))
-                ).alias("_m")
-            )
-            .filter((F.size("_m") >= 2) & (F.size("_m") <= max_bucket))
-            .select("_m")
-        )
-        return (
-            buckets.select(F.explode("_m").alias("_a"), "_m")
-            .select("_a", F.explode("_m").alias("_b"))
-            .filter(F.col("_a._i") < F.col("_b._i"))
-            .select(
-                F.col("_a._i").alias("id_a"),
-                F.col("_b._i").alias("id_b"),
-                F.bit_count(
-                    F.col("_a._s").bitwiseXOR(F.col("_b._s"))
-                ).alias("hamming"),
-            )
-            .distinct()
-            .filter(F.col("hamming") <= max_hamming)
-        )
-    # unguarded path: self-join, persisted at its measured placement
-    chunked = chunked.persist()
-    a = chunked.select(
-        F.col(id_col).alias("id_a"), F.col("simhash").alias("_sa"), "_chunk", "_cv"
-    )
-    b = chunked.select(
-        F.col(id_col).alias("id_b"), F.col("simhash").alias("_sb"), "_chunk", "_cv"
-    )
-    return (
-        a.join(b, ["_chunk", "_cv"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a", "id_b",
-            F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))).alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
+    return _hamming_pairs(
+        signatures, id_col, "simhash", 64, chunks, max_hamming, max_bucket
     )
 
 
@@ -900,7 +917,7 @@ def duplicated_span_extents(
     )
     # grams feeds the hot-count AND the coverage join — persist so the
     # tokenize+explode runs once. Caller releases via clearCache() —
-    # the lsh_candidate_pairs/semdedup contract (ADVICE r7: persisted
+    # the minhash_dedup/semdedup contract (ADVICE r7: persisted
     # blocks stay PINNED after the action completes, they are not
     # auto-released, so repeated calls without a clearCache
     # accumulate executor storage; bench.py and the gate runner both
@@ -1619,14 +1636,14 @@ def minhash_dedup_incremental(
     the gate is self-contained), but the LSH bucket join is
     all × NEW instead of all × all: candidate fan-out is bounded by
     the BATCH's bucket occupancy, so a small daily batch probes a
-    100 TB history for the cost of its own buckets. (r13: with the
-    ``max_bucket`` guard set, the probe is a bucket-collect + pair
-    explode rather than a join — buckets with no new member are
-    filtered by a codegen flag before any pair work; see the inline
-    note for the measured A/B.) Verification is
-    the same candidate-pruned exact-Jaccard second pass as
-    minhash_dedup (sets built only for docs appearing in a
-    candidate pair; never a full-corpus set shuffle).
+    100 TB history for the cost of its own buckets. Pairing is
+    :func:`_bucket_pairs` with a has-new bucket prune: buckets with
+    no new member are dropped before any pair work (they produce no
+    admission pair). Measured against the r4 join shape in
+    OPTIMIZATION_r13.md: 9.82 → 8.65 s end-to-end on the 500k curve
+    corpus, admission rows identical. Verification is the same
+    candidate-pruned exact-Jaccard pass as minhash_dedup
+    (:func:`_verify_jaccard`).
 
     Replayability contract (the dedup_minhash precedent): survivors
     are defined by EXACT verified Jaccard, so the oracle replays the
@@ -1640,134 +1657,29 @@ def minhash_dedup_incremental(
     minhash_dedup's sublinear shape with the batch-bounded
     candidate volume on top.
     """
-    if num_perm % bands:
-        raise ValueError("num_perm must be divisible by bands")
     flagged = df.withColumn("_new", is_new)
     sigs = minhash_signatures(
         flagged, id_col, text_col, k, num_perm
     ).join(
         flagged.select(id_col, "_new"), id_col
     ).persist()
-    r = num_perm // bands
-    band_cols = F.array(*[
-        F.struct(
-            F.lit(j).alias("band"),
-            F.xxhash64(
-                *[F.col(f"h{j * r + i}") for i in range(r)]
-            ).alias("bh"),
+    banded = _band(sigs, id_col, num_perm, bands, "_new")
+    member = F.struct(F.col(id_col).alias("_i"), F.col("_new").alias("_n"))
+    # admission rule: the b side is new; a is history at any id or an
+    # earlier new doc
+    cand = (
+        _bucket_pairs(
+            banded, ["_band", "_bh"], member, max_bucket,
+            having=F.max("_new"),
         )
-        for j in range(bands)
-    ])
-    banded = (
-        sigs.select(id_col, "_new", F.explode(band_cols).alias("_b"))
-        .select(
-            id_col,
-            "_new",
-            F.col("_b.band").alias("_band"),
-            F.col("_b.bh").alias("_bh"),
-        )
-    )
-    if max_bucket is not None:
-        # r13 (the lsh_candidate_pairs bucket-explode rewrite applied
-        # to the all×NEW admission shape): ONE groupBy collects each
-        # bucket's (id, new) members plus a codegen has-new flag;
-        # buckets without a new member never explode (they produced
-        # no candidates in the join form either — the b side was
-        # new-only), the size guard is the same [2, max_bucket]
-        # window, and the admission rule ((~new_a) | id_a < id_b,
-        # id_a != id_b) moves onto the exploded structs verbatim.
-        # Replaces [persist ×2 + hot-count + anti-join + all×new
-        # join]. Measured (tools/r13_ab/minhash_incremental_bucket_ab
-        # .py, 500k curve corpus, 1-in-7 batch, interleaved
-        # min-of-3): 9.82 → 8.65 s end-to-end, faster in every
-        # interleaved pair; 71,429 admission rows collect-identical.
-        # Reference-pinned in tests/test_r13_optimizations.py.
-        buckets = (
-            banded.groupBy("_band", "_bh")
-            .agg(
-                F.collect_list(
-                    F.struct(
-                        F.col(id_col).alias("_i"),
-                        F.col("_new").alias("_n"),
-                    )
-                ).alias("_m"),
-                F.max(F.col("_new").cast("int")).alias("_has_new"),
-            )
-            .filter(
-                (F.size("_m") >= 2)
-                & (F.size("_m") <= max_bucket)
-                & (F.col("_has_new") == 1)
-            )
-            .select("_m")
-        )
-        cand = (
-            buckets.select(F.explode("_m").alias("_a"), "_m")
-            .select("_a", F.explode("_m").alias("_b"))
-            .filter(F.col("_b._n"))
-            .filter((~F.col("_a._n")) | (F.col("_a._i") < F.col("_b._i")))
-            .filter(F.col("_a._i") != F.col("_b._i"))
-            .select(
-                F.col("_a._i").alias("id_a"), F.col("_b._i").alias("id_b")
-            )
-            .distinct()
-            .persist()
-        )
-    else:
-        # unguarded path: all×new join (spillable under single-bucket
-        # skew — the same reasoning as lsh_candidate_pairs' None path)
-        banded = banded.persist()
-        a = banded.select(
-            F.col(id_col).alias("id_a"),
-            F.col("_new").alias("_new_a"),
-            "_band",
-            "_bh",
-        )
-        b = banded.filter(F.col("_new")).select(
-            F.col(id_col).alias("id_b"), "_band", "_bh"
-        )
-        cand = (
-            a.join(b, ["_band", "_bh"])
-            .filter(
-                (~F.col("_new_a")) | (F.col("id_a") < F.col("id_b"))
-            )
-            .filter(F.col("id_a") != F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-            .persist()
-        )
-    ids = (
-        cand.select(F.col("id_a").alias(id_col))
-        .union(cand.select(F.col("id_b").alias(id_col)))
+        .filter(F.col("_b._n"))
+        .filter((~F.col("_a._n")) | (F.col("_a._i") < F.col("_b._i")))
+        .filter(F.col("_a._i") != F.col("_b._i"))
+        .select(F.col("_a._i").alias("id_a"), F.col("_b._i").alias("id_b"))
         .distinct()
-    )
-    cand_docs = df.join(F.broadcast(ids), id_col, "left_semi")
-    need = (
-        _hashed_shingle_table(cand_docs, id_col, text_col, k)
-        .groupBy(id_col)
-        .agg(F.collect_set(F.col("_sh")).alias("_set"))
         .persist()
     )
-    sa = need.select(
-        F.col(id_col).alias("id_a"), F.col("_set").alias("_sa")
-    )
-    sb = need.select(
-        F.col(id_col).alias("id_b"), F.col("_set").alias("_sb")
-    )
-    inter = F.size(F.array_intersect("_sa", "_sb"))
-    verified = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("_i", inter)
-        .withColumn(
-            "jaccard",
-            F.col("_i").cast("double")
-            / (
-                F.size("_sa") + F.size("_sb") - F.col("_i")
-            ).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b")
-    )
+    verified = _verify_jaccard(df, cand, id_col, text_col, k, threshold)
     matches = verified.groupBy("id_b").agg(
         F.min("id_a").cast("bigint").alias("matched_id")
     )

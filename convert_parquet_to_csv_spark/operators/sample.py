@@ -39,6 +39,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from convert_parquet_to_csv_spark.sources.io_ops import _global_rank
+
 DEFAULT_SEED = 721  # the reference's seed (utils.py:73)
 
 # auto strategy cutoff: above this n, the TakeOrderedAndProject
@@ -169,28 +171,22 @@ def _take_n_smallest(df: DataFrame, order_col: str, n: int) -> DataFrame:
 
     A bare ``Window.orderBy`` moves every row to a single partition; at
     large n that is the bottleneck. Instead: range-partition on the
-    order column, sort within partitions, then turn per-partition row
-    numbers into *global* ranks by adding broadcast per-partition
-    offsets — only the tiny counts table ever reaches the driver.
+    order column, then rank with :func:`_global_rank` — partition ids
+    from ``repartitionByRange`` are ordered by range bounds, so
+    per-partition offsets turn local row numbers into global ranks, and
+    only the tiny counts table ever reaches the driver. The range
+    exchange makes :func:`_global_rank` checkpoint the partitioned rows
+    first: its bounds are sampled afresh in every job, so counting one
+    job's partitions and ranking another's would return the wrong
+    number of rows.
     """
-    ranged = df.repartitionByRange(df.sparkSession.sparkContext.defaultParallelism, order_col)
-    part = ranged.withColumn("_pid", F.spark_partition_id())
-    counts = part.groupBy("_pid").count().collect()
-    # Partition ids from repartitionByRange are ordered by range bounds,
-    # so cumulative counts in pid order are global-rank offsets.
-    offsets, acc = [], 0
-    for row in sorted(counts, key=lambda r: r["_pid"]):
-        offsets.append((row["_pid"], acc))
-        acc += row["count"]
-    offsets_df = df.sparkSession.createDataFrame(
-        offsets, "_pid INT, _offset LONG"
+    ranged = df.repartitionByRange(
+        df.sparkSession.sparkContext.defaultParallelism, order_col
     )
-    w = Window.partitionBy("_pid").orderBy(order_col)
     return (
-        part.withColumn("_rn", F.row_number().over(w))
-        .join(F.broadcast(offsets_df), "_pid")
-        .filter(F.col("_rn") + F.col("_offset") <= n)
-        .drop("_pid", "_rn", "_offset")
+        _global_rank(ranged, order_col, "_rank")
+        .filter(F.col("_rank") < n)
+        .drop("_rank")
     )
 
 

@@ -239,11 +239,8 @@ def write_csv(
     header: bool = True,
     max_records_per_file: int | None = None,
     single_file: bool = False,
-    timestamp_format: str = CSV_TIMESTAMP_FORMAT,
-    null_value: str = "",
     mode: str = "overwrite",
     with_index: bool = False,
-    fast_path: bool = True,
 ) -> None:
     """CSV sink with the reference's dialect surface (SURVEY.md §2.2).
 
@@ -259,25 +256,21 @@ def write_csv(
       column (utils.py:160, default ``index=True``); off by default as
       SURVEY.md §2.2 prescribes. Uses a zero-based contiguous id
       computed scalably (per-partition offsets, no global sort).
-    - ``fast_path`` — pre-render every field to text in whole-stage
-      codegen (see :func:`_stringify_for_csv`; ~4-5× faster sink,
-      byte-identical output). Disable only when a custom
-      ``timestamp_format`` must be honored by the writer itself.
+
+    Every field is pre-rendered to text in whole-stage codegen
+    (:func:`_stringify_for_csv`; ~4-5× faster sink than the writer's
+    own conversion, byte-identical output), then written with the
+    pinned dialect :data:`CSV_DEFAULTS`.
     """
     if with_index:
         df = _with_row_index(df)
-    if fast_path and timestamp_format == CSV_TIMESTAMP_FORMAT:
-        df = _stringify_for_csv(df)
+    df = _stringify_for_csv(df)
     writer = (
-        df.coalesce(1) if single_file else df
-    ).write.mode(mode).option("header", str(header).lower())
-    writer = writer.option("timestampFormat", timestamp_format)
-    writer = writer.option("nullValue", null_value)
-    writer = writer.option("escape", '"')
-    # The writer trims cell whitespace by default — no reference engine
-    # does (caught by tests/test_roundtrip_property.py: " " became "").
-    writer = writer.option("ignoreLeadingWhiteSpace", "false")
-    writer = writer.option("ignoreTrailingWhiteSpace", "false")
+        (df.coalesce(1) if single_file else df)
+        .write.mode(mode)
+        .options(**CSV_DEFAULTS)
+        .option("header", str(header).lower())
+    )
     if max_records_per_file is not None:
         writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
     if single_file:
@@ -288,49 +281,51 @@ def write_csv(
         writer.csv(path)
 
 
+def _global_rank(df: DataFrame, order_col: str, name: str) -> DataFrame:
+    """``df`` plus ``name``: a contiguous 0-based rank — partition
+    order first, ``order_col`` within each partition — without a
+    global sort or a one-partition funnel.
+
+    Per-partition row counts (tiny; collected to the driver) become
+    broadcast offsets added to each partition's row number. That is
+    two jobs over ``df``, so per-partition contents must be identical
+    across the two evaluations. That holds for deterministic scans,
+    but NOT after an exchange whose runtime partitioning can differ
+    between jobs: AQE coalescing, ``rand``, or ``repartitionByRange``,
+    whose range bounds are re-sampled in every job. Guard: any plan
+    containing an Exchange is pinned with an eager ``localCheckpoint``
+    first, so both jobs read the same materialized blocks.
+    """
+    if "Exchange" in df._jdf.queryExecution().executedPlan().toString():
+        df = df.localCheckpoint(eager=True)
+    part = df.withColumn("_pid", F.spark_partition_id())
+    offsets, acc = [], 0
+    for row in sorted(part.groupBy("_pid").count().collect()):
+        offsets.append((row["_pid"], acc))
+        acc += row["count"]
+    offsets_df = df.sparkSession.createDataFrame(
+        offsets, "_pid INT, _offset LONG"
+    )
+    w_rank = F.row_number().over(Window.partitionBy("_pid").orderBy(order_col))
+    return (
+        part.withColumn("_rn", w_rank - F.lit(1))
+        .join(F.broadcast(offsets_df), "_pid")
+        .withColumn(name, F.col("_offset") + F.col("_rn"))
+        .drop("_pid", "_rn", "_offset")
+    )
+
+
 def _with_row_index(df: DataFrame, name: str = "index") -> DataFrame:
     """Contiguous 0-based row index without a global sort.
 
     ``monotonically_increasing_id`` is non-contiguous across partitions;
     a windowed ``row_number()`` over it would funnel everything through
-    one partition. Instead: per-partition counter + broadcast of
-    per-partition offsets — O(1) driver data, no shuffle of the rows.
-
-    CONSTRAINT (review finding): the offsets job and the final job
-    each evaluate ``df``'s plan, so per-partition contents must be
-    identical across the two evaluations. That holds for deterministic
-    scans (the CSV-export caller), but NOT after a shuffle whose
-    runtime partitioning can differ between jobs (AQE coalesce, rand).
-    Guard: any plan containing an Exchange is pinned with an eager
-    ``localCheckpoint`` first, so both jobs read the same materialized
-    blocks instead of re-running the non-deterministic stage.
+    one partition. :func:`_global_rank` over it instead — per-partition
+    counter + broadcast of per-partition offsets, O(1) driver data, no
+    shuffle of the rows.
     """
-    spark = df.sparkSession
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    if "Exchange" in plan:
-        df = df.localCheckpoint(eager=True)
-    part = df.withColumn("_pid", F.spark_partition_id()).withColumn(
-        "_mid", F.monotonically_increasing_id()
-    )
-    # Tiny per-partition row counts; collected to build offsets.
-    counts = (
-        part.groupBy("_pid").count().orderBy("_pid").collect()
-    )
-    offsets, acc = {}, 0
-    for row in counts:
-        offsets[row["_pid"]] = acc
-        acc += row["count"]
-    offsets_df = spark.createDataFrame(
-        [(int(k), int(v)) for k, v in offsets.items()], "_pid INT, _offset LONG"
-    )
-    w_rank = F.row_number().over(Window.partitionBy("_pid").orderBy("_mid"))
-    out = (
-        part.withColumn("_rn", w_rank - F.lit(1))
-        .join(F.broadcast(offsets_df), "_pid")
-        .withColumn(name, F.col("_offset") + F.col("_rn"))
-        .drop("_pid", "_mid", "_rn", "_offset")
-    )
-    return out.select(name, *df.columns)
+    mid = df.withColumn("_mid", F.monotonically_increasing_id())
+    return _global_rank(mid, "_mid", name).select(name, *df.columns)
 
 
 def write_parquet(

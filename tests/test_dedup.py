@@ -675,7 +675,7 @@ def test_minhash_incremental_admission_rule(spark):
 
 
 def test_minhash_incremental_rejects_indivisible_bands(spark):
-    """Contract parity with lsh_candidate_pairs (dedup.py:484):
+    """Contract parity with lsh_candidate_pairs (dedup._band):
     num_perm % bands != 0 raises instead of silently dropping the
     trailing permutations from banding (ADVICE r9 #2)."""
     import pytest as _pytest
@@ -692,3 +692,356 @@ def test_minhash_incremental_rejects_indivisible_bands(spark):
         minhash_dedup_incremental(
             df, F.col("doc_id") % 7 == F.lit(3), num_perm=30, bands=8
         )
+
+
+# --- hash-bucket pairing (_bucket_pairs and its callers) ---------------------
+
+LSH_DOCS = [
+    # two exact-duplicate clusters + singletons: deterministic buckets
+    (1, "alpha beta gamma delta epsilon zeta"),
+    (2, "alpha beta gamma delta epsilon zeta"),
+    (3, "alpha beta gamma delta epsilon zeta"),
+    (4, "one two three four five six seven"),
+    (5, "one two three four five six seven"),
+    (6, "totally different content here now"),
+    (7, "yet another unrelated document body"),
+]
+
+
+def test_lsh_bucket_explode_matches_reference(spark):
+    """The bucket-explode pair set must equal reference pair
+    generation (all a<b pairs from buckets of size in [2,
+    max_bucket]) at every guard value, including guards small enough
+    to DROP the 3-doc cluster's buckets."""
+    df = spark.createDataFrame(LSH_DOCS, "doc_id LONG, text STRING")
+    sigs = D.minhash_signatures(df, id_col="doc_id", k=2, num_perm=8)
+    # reference banded table (same banding exprs — the hash family is
+    # pinned by the recall gates; what is tested is pairing + guard)
+    r = 8 // 4
+    band_cols = F.array(*[
+        F.struct(
+            F.lit(j).alias("band"),
+            F.xxhash64(*[F.col(f"h{j * r + i}") for i in range(r)]).alias("bh"),
+        )
+        for j in range(4)
+    ])
+    banded = sigs.select(
+        F.col("doc_id"), F.explode(band_cols).alias("_b")
+    ).select("doc_id", "_b.band", "_b.bh")
+    buckets: dict = {}
+    for row in banded.collect():
+        buckets.setdefault((row.band, row.bh), []).append(row.doc_id)
+    for mb in (1, 2, 3, 1000):
+        want = set()
+        for ids in buckets.values():
+            if 2 <= len(ids) <= mb:
+                ids = sorted(ids)
+                for i in range(len(ids)):
+                    for j in range(i + 1, len(ids)):
+                        want.add((ids[i], ids[j]))
+        got = {
+            (row.id_a, row.id_b)
+            for row in D.lsh_candidate_pairs(
+                sigs, id_col="doc_id", num_perm=8, bands=4, max_bucket=mb
+            ).collect()
+        }
+        assert got == want, f"max_bucket={mb}"
+    assert want, "fixture must produce candidate pairs at mb=1000"
+    # the unguarded (None) self-join path: all pairs, no size cap
+    got_none = {
+        (row.id_a, row.id_b)
+        for row in D.lsh_candidate_pairs(
+            sigs, id_col="doc_id", num_perm=8, bands=4, max_bucket=None
+        ).collect()
+    }
+    want_none = set()
+    for ids in buckets.values():
+        ids = sorted(ids)
+        for i in range(len(ids)):
+            for j in range(i + 1, len(ids)):
+                want_none.add((ids[i], ids[j]))
+    assert got_none == want_none
+
+
+def test_minhash_incremental_bucket_matches_join_form(spark):
+    """The bucket-collect path (guarded) must emit the identical (id,
+    kept, matched_id) rows as the all×new join path
+    (max_bucket=None) at a guard wide enough to bind nothing, and
+    respect the size guard when it binds. Fixture includes old-only
+    dup clusters (exercising the has-new bucket prune),
+    new-vs-history matches, and new-vs-new ordering."""
+    docs = [
+        (1, "alpha beta gamma delta epsilon zeta"),   # history
+        (2, "alpha beta gamma delta epsilon zeta"),   # history dup (old-only pair)
+        (7, "alpha beta gamma delta epsilon zeta"),   # new, matches history
+        (14, "one two three four five six seven"),    # new
+        (21, "one two three four five six seven"),    # new, matches 14
+        (3, "totally different content here now"),    # history singleton
+        (28, "fresh unmatched new document body"),    # new singleton
+    ]
+    df = spark.createDataFrame(docs, "doc_id LONG, text STRING")
+    is_new = (F.col("doc_id") % 7) == 0
+    guarded = {
+        tuple(r)
+        for r in D.minhash_dedup_incremental(
+            df, is_new, k=2, num_perm=8, bands=4, max_bucket=1000
+        ).collect()
+    }
+    spark.catalog.clearCache()
+    join_form = {
+        tuple(r)
+        for r in D.minhash_dedup_incremental(
+            df, is_new, k=2, num_perm=8, bands=4, max_bucket=None
+        ).collect()
+    }
+    spark.catalog.clearCache()
+    assert guarded == join_form and guarded
+    by_id = {r[0]: r for r in guarded}
+    assert by_id[7][1] is False and by_id[7][2] in (1, 2)  # history match
+    assert by_id[14][1] is True  # smallest of the new pair survives
+    assert by_id[21] == (21, False, 14)
+    assert by_id[28][1] is True
+    # a guard of 1 drops every bucket (all pair-productive buckets
+    # have >= 2 members) => every new doc is kept
+    all_kept = {
+        tuple(r)
+        for r in D.minhash_dedup_incremental(
+            df, is_new, k=2, num_perm=8, bands=4, max_bucket=1
+        ).collect()
+    }
+    spark.catalog.clearCache()
+    assert all_kept == {(7, True, None), (14, True, None),
+                        (21, True, None), (28, True, None)}
+
+
+def test_simhash_bucket_explode_matches_reference(spark):
+    """Pair set + hamming values must equal reference generation from
+    collected buckets at every guard value, and the None path must
+    agree at an unbinding guard."""
+    df = spark.createDataFrame(LSH_DOCS, "doc_id LONG, text STRING")
+    sigs = D.simhash_signatures(df, id_col="doc_id")
+    rows = sigs.collect()
+    width = 64 // 4
+    mask = (1 << width) - 1
+    buckets: dict = {}
+    u64 = (1 << 64) - 1
+    for row in rows:
+        # Spark longs arrive signed: emulate shiftrightunsigned /
+        # bit_count over the unsigned 64-bit view.
+        for c in range(4):
+            cv = ((row.simhash & u64) >> (c * width)) & mask
+            buckets.setdefault((c, cv), []).append((row.doc_id, row.simhash))
+    for mb in (1, 2, 3, 1000):
+        want = set()
+        for members in buckets.values():
+            if 2 <= len(members) <= mb:
+                ms = sorted(members)
+                for i in range(len(ms)):
+                    for j in range(i + 1, len(ms)):
+                        h = bin((ms[i][1] ^ ms[j][1]) & ((1 << 64) - 1)).count("1")
+                        if h <= 3:
+                            want.add((ms[i][0], ms[j][0], h))
+        got = {
+            (row.id_a, row.id_b, row.hamming)
+            for row in D.simhash_pairs(
+                sigs, id_col="doc_id", max_bucket=mb
+            ).collect()
+        }
+        assert got == want, f"max_bucket={mb}"
+    assert want, "fixture must produce simhash pairs at mb=1000"
+    got_none = {
+        (row.id_a, row.id_b, row.hamming)
+        for row in D.simhash_pairs(
+            sigs, id_col="doc_id", max_bucket=None
+        ).collect()
+    }
+    assert got_none == want  # no bucket exceeds 1000 on this fixture
+
+
+_HOT_TEXT = (
+    "the exact same viral chain letter forwarded everywhere again and "
+    "again with identical words"
+)
+_CLUSTER_TEXT = "spark shuffles catalyst plans across many large clusters daily"
+_HOT_DOCS = (
+    [(i, _HOT_TEXT) for i in range(120)]  # one bucket per band, 120 deep
+    + [(120, _HOT_TEXT.replace("viral", "famous"))]  # near-dup of the hot text
+    + [(200 + i, _CLUSTER_TEXT) for i in range(3)]
+    + [(203, _CLUSTER_TEXT.replace("daily", "weekly"))]
+    + [(300, "two short twins here"), (301, "two short twins here")]
+    + [(400 + i, f"unique note {i} about topic {i * 7} and {i * 13}")
+       for i in range(5)]
+)
+_GUARDS = (1, 2, 3, 50, 1000, None)
+
+
+def _bucket_reference(buckets: dict, max_bucket, pair) -> set:
+    """Python replay of the bucket policy: ``pair(x, y)`` over every
+    ordered member pair of each bucket whose size is in [2,
+    max_bucket] (every bucket when unguarded); None results drop."""
+    out = set()
+    for members in buckets.values():
+        if max_bucket is not None and not 2 <= len(members) <= max_bucket:
+            continue
+        for x in members:
+            for y in members:
+                p = pair(x, y)
+                if p is not None:
+                    out.add(p)
+    return out
+
+
+def _minhash_buckets(df) -> dict:
+    banded = D._band(D.minhash_signatures(df, k=2, num_perm=8), "doc_id", 8, 4)
+    buckets: dict = {}
+    for row in banded.collect():
+        buckets.setdefault((row._band, row._bh), []).append(row.doc_id)
+    return buckets
+
+
+def _case_lsh(spark):
+    df = spark.createDataFrame(_HOT_DOCS, "doc_id LONG, text STRING")
+    sigs = D.minhash_signatures(df, k=2, num_perm=8)
+    buckets = _minhash_buckets(df)
+
+    def run(mb):
+        out = D.lsh_candidate_pairs(sigs, num_perm=8, bands=4, max_bucket=mb)
+        return {(r.id_a, r.id_b) for r in out.collect()}
+
+    def want(mb):
+        return _bucket_reference(
+            buckets, mb, lambda a, b: (a, b) if a < b else None
+        )
+
+    return run, want
+
+
+def _hamming_buckets(rows, nbits, bands):
+    """(band, value) -> [(id, hash)], bands sliced MSB-first."""
+    width = nbits // bands
+    mask = (1 << width) - 1
+    u64 = (1 << 64) - 1
+    buckets: dict = {}
+    for i, h in rows:
+        for b in range(bands):
+            v = ((h & u64) >> (width * (bands - 1 - b))) & mask
+            buckets.setdefault((b, v), []).append((i, h))
+    return buckets
+
+
+def _hamming_pair(max_hamming):
+    def pair(x, y):
+        h = bin((x[1] ^ y[1]) & ((1 << 64) - 1)).count("1")
+        return (x[0], y[0], h) if x[0] < y[0] and h <= max_hamming else None
+
+    return pair
+
+
+def _case_simhash(spark):
+    df = spark.createDataFrame(_HOT_DOCS, "doc_id LONG, text STRING")
+    sigs = D.simhash_signatures(df).persist()
+    buckets = _hamming_buckets(
+        [(r.doc_id, r.simhash) for r in sigs.collect()], 64, 4
+    )
+
+    def run(mb):
+        out = D.simhash_pairs(sigs, max_hamming=3, max_bucket=mb)
+        return {(r.id_a, r.id_b, r.hamming) for r in out.collect()}
+
+    return run, lambda mb: _bucket_reference(buckets, mb, _hamming_pair(3))
+
+
+def _case_ahash(spark):
+    from convert_parquet_to_csv_spark.operators.multimodal import (
+        ahash_neardup_pairs,
+    )
+
+    # 120 hashes share the top 12 bits (three hot 4-bit bands) and
+    # spread over the low band; plus cold twins and a near pair
+    rows = [(i, 0xA5C0 | (i % 16)) for i in range(120)]
+    rows += [(500, 0x1234), (501, 0x1234), (502, 0x1236)]
+    hashes = spark.createDataFrame(rows, "media_id LONG, ahash LONG")
+    buckets = _hamming_buckets(rows, 16, 4)
+
+    def run(mb):
+        out = ahash_neardup_pairs(
+            hashes, grid=4, bands=4, max_hamming=2, max_bucket=mb
+        )
+        return {(r.id_a, r.id_b, r.hamming) for r in out.collect()}
+
+    return run, lambda mb: _bucket_reference(buckets, mb, _hamming_pair(2))
+
+
+def _case_incremental(spark):
+    df = spark.createDataFrame(_HOT_DOCS, "doc_id LONG, text STRING")
+    buckets = _minhash_buckets(df)
+    new = {i for i, _ in _HOT_DOCS if i % 7 == 0}
+    verified = {
+        (r.id_a, r.id_b)
+        for r in D.ngram_jaccard_pairs(df, k=2, threshold=0.5).collect()
+    }
+
+    def admit(a, b):
+        if b in new and (a not in new or a < b) and a != b:
+            if (min(a, b), max(a, b)) in verified:
+                return (a, b)
+        return None
+
+    def run(mb):
+        out = D.minhash_dedup_incremental(
+            df, F.col("doc_id") % 7 == 0, k=2, num_perm=8, bands=4,
+            max_bucket=mb,
+        )
+        got = {tuple(r) for r in out.collect()}
+        spark.catalog.clearCache()
+        return got
+
+    def want(mb):
+        matched: dict = {}
+        for a, b in _bucket_reference(buckets, mb, admit):
+            matched[b] = min(a, matched.get(b, a))
+        return {(b, b not in matched, matched.get(b)) for b in new}
+
+    return run, want
+
+
+@pytest.mark.parametrize(
+    "case", [_case_lsh, _case_simhash, _case_ahash, _case_incremental],
+    ids=["lsh", "simhash", "ahash", "incremental"],
+)
+def test_bucket_pairs_hot_bucket_matches_reference(spark, case):
+    """Every _bucket_pairs caller on a corpus whose hot bucket (120+
+    members) is far larger than most guards: at each guard — binding
+    (1, 2, 3, 50), non-binding (1000) and unguarded (None) — the
+    output equals the Python bucket reference."""
+    run, want = case(spark)
+    results = {}
+    for mb in _GUARDS:
+        results[mb] = run(mb)
+        assert results[mb] == want(mb), f"max_bucket={mb}"
+    # the hot bucket binds: dropping it loses pairs the wide guard keeps
+    assert results[50] != results[1000]
+    assert results[1000] == results[None]
+    spark.catalog.clearCache()
+
+
+def test_ahash_pairs_plan_has_no_cache_or_anti_join(spark):
+    """ahash_neardup_pairs pairs through the shared bucket collect:
+    no persisted banded table and no hot-bucket anti-join."""
+    import contextlib
+    import io
+
+    from convert_parquet_to_csv_spark.operators.multimodal import (
+        ahash_neardup_pairs,
+    )
+
+    hashes = spark.createDataFrame(
+        [(i, 0xA5C0 | (i % 16)) for i in range(40)],
+        "media_id LONG, ahash LONG",
+    )
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        ahash_neardup_pairs(hashes, grid=4, bands=4).explain(mode="extended")
+    plan = buf.getvalue()
+    assert "InMemoryRelation" not in plan and "LeftAnti" not in plan
+    assert "collect_list" in plan

@@ -1280,7 +1280,7 @@ def test_ahash_max_bucket_drops_never_corrupts(spark):
     pairs must be exactly a subset of the uncapped answer with
     identical exact hamming — and pairs whose every agreeing band
     is hot vanish while cold-bucket pairs survive. Mirrors
-    lsh_candidate_pairs' max_bucket contract (dedup.py:467)."""
+    lsh_candidate_pairs' max_bucket contract (dedup._bucket_pairs)."""
     from convert_parquet_to_csv_spark.operators.multimodal import (
         ahash_neardup_pairs,
     )
@@ -1324,7 +1324,6 @@ def test_ahash_max_bucket_drops_never_corrupts(spark):
             hashes, grid=4, bands=4, max_hamming=2, max_bucket=8
         ).collect()
     }
-    spark.catalog.clearCache()  # guard-persisted banded tables
     # drops only, never corrupts: subset with identical hamming
     assert set(got_capped) <= set(want)
     assert all(got_capped[p] == want[p] for p in got_capped)

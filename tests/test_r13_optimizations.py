@@ -1,25 +1,22 @@
 """Equivalence pins + mechanized plan claims for the r13 optimization
 round (VERDICT r12 'Next round' items 1, 4, 6, 7).
 
-1. ``cosine_similarity(a, b, dim)``: the unrolled codegen path must be
-   bit-identical to the HOF path on length-``dim`` vectors, including
-   the NULL-vector and all-zero guards; the documented divergences
-   (short inputs) are pinned AS divergences so they cannot silently
-   change meaning.
-2. ``maximal_duplicated_extents(count_partitions=...)``: the in-plan
+1. ``maximal_duplicated_extents(count_partitions=...)``: the in-plan
    hot-count width knob must not change a single output row at any
    width combination.
-3. ``remove_duplicated_spans``: the candidate-gram cache is released
+2. ``remove_duplicated_spans``: the candidate-gram cache is released
    in-operator — the SQL cache manager is empty after the action (the
    r12 shape left one InMemoryRelation pinned per call), and the
    result is unchanged.
-4. ``_gopher_gram_masses(_consolidate=False)``: the A/B-only legacy
+3. ``_gopher_gram_masses(_consolidate=False)``: the A/B-only legacy
    exchange shape computes identical masses (so the r13 dup-heavy
    measurement compares equals).
-5. Plan-claim mechanization (VERDICT r12 item 4): every node-count
+4. Plan-claim mechanization (VERDICT r12 item 4): every node-count
    delta the r13 ledger claims is asserted against the committed
    ``plans/r13`` dumps via ``plans/r13/claims.json`` — an overstated
    claim fails the suite.
+
+The LSH bucket-pairing pins live in tests/test_dedup.py.
 """
 
 from __future__ import annotations
@@ -29,17 +26,12 @@ import os
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
-    FloatType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
 
-from convert_parquet_to_csv_spark.functions.vectors import (
-    cosine_similarity,
-)
 from convert_parquet_to_csv_spark.operators.curation import (
     _gopher_gram_masses,
     remove_duplicated_spans,
@@ -49,53 +41,6 @@ from convert_parquet_to_csv_spark.operators.dedup import (
 )
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-_VEC_SCHEMA = StructType(
-    [
-        StructField("id", LongType()),
-        StructField("a", ArrayType(FloatType())),
-        StructField("b", ArrayType(FloatType())),
-    ]
-)
-
-COS_ROWS = [
-    (1, [1.0, 2.0, 3.0, 4.0], [0.5, -1.5, 2.5, -3.5]),
-    (2, [0.0, 0.0, 0.0, 0.0], [1.0, 1.0, 1.0, 1.0]),  # zero vector
-    (3, [1e30, -1e30, 1e-30, 7.0], [2.0, 2.0, 2.0, 2.0]),
-    (4, [1.0, None, 3.0, 4.0], [1.0, 1.0, 1.0, 1.0]),  # NULL element
-    (5, [1.0, 2.0], [1.0, 1.0, 1.0, 1.0]),  # short LEFT side
-    (6, None, [1.0, 1.0, 1.0, 1.0]),  # NULL array
-    (7, [-0.0, 0.0, -0.0, 0.0], [1.0, 1.0, 1.0, 1.0]),  # signed zeros
-    (8, [1.0, 2.0], [3.0, 4.0]),  # BOTH sides short
-]
-
-
-def test_cosine_dim_bitwise_matches_hof_on_exact_length(spark):
-    df = spark.createDataFrame(COS_ROWS, _VEC_SCHEMA)
-    rows = {
-        r.id: r
-        for r in df.select(
-            "id",
-            cosine_similarity("a", "b").alias("hof"),
-            cosine_similarity("a", "b", 4).alias("fixed"),
-        ).collect()
-    }
-    # Exact-length rows (incl. zero-vector, NULL-element, NULL-array,
-    # signed-zero guards): bit-identical.
-    for i in (1, 2, 3, 4, 6, 7):
-        r = rows[i]
-        assert (r.hof is None) == (r.fixed is None), r
-        if r.hof is not None:
-            assert r.hof == r.fixed, r
-    # Documented divergences (functions/vectors NOTE): short inputs.
-    # One side short: HOF's NULL-padded dot is NULL but its finite
-    # norms pass the guard -> NULL; the fixed form's NULL denom falls
-    # through the guard -> 0.0.
-    assert rows[5].hof is None and rows[5].fixed == 0.0
-    # Both sides short: HOF computes the finite partial cosine, the
-    # fixed form yields the guard fallback.
-    assert rows[8].hof is not None and rows[8].fixed == 0.0
-
 
 EXTENT_DOCS = [
     (1, "a b c d e f g a b c d e f g"),  # within-doc repeat
@@ -232,186 +177,6 @@ def test_consolidate_exchanges_param_result_invariant(spark):
     )
     spark.catalog.clearCache()
     assert a == b and a
-
-
-LSH_DOCS = [
-    # two exact-duplicate clusters + singletons: deterministic buckets
-    (1, "alpha beta gamma delta epsilon zeta"),
-    (2, "alpha beta gamma delta epsilon zeta"),
-    (3, "alpha beta gamma delta epsilon zeta"),
-    (4, "one two three four five six seven"),
-    (5, "one two three four five six seven"),
-    (6, "totally different content here now"),
-    (7, "yet another unrelated document body"),
-]
-
-
-def test_lsh_bucket_explode_matches_reference(spark):
-    """r13 lsh_candidate_pairs rewrite: the bucket-explode pair set
-    must equal reference pair generation (all a<b pairs from buckets
-    of size in [2, max_bucket]) at every guard value, including
-    guards small enough to DROP the 3-doc cluster's buckets."""
-    from convert_parquet_to_csv_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
-
-    df = spark.createDataFrame(LSH_DOCS, _DOC_SCHEMA)
-    sigs = minhash_signatures(df, id_col="doc_id", k=2, num_perm=8)
-    # reference banded table (same banding exprs — the hash family is
-    # pinned by the recall gates; what changed is pairing + guard)
-    r = 8 // 4
-    band_cols = F.array(*[
-        F.struct(
-            F.lit(j).alias("band"),
-            F.xxhash64(*[F.col(f"h{j * r + i}") for i in range(r)]).alias("bh"),
-        )
-        for j in range(4)
-    ])
-    banded = sigs.select(
-        F.col("doc_id"), F.explode(band_cols).alias("_b")
-    ).select("doc_id", "_b.band", "_b.bh")
-    buckets: dict = {}
-    for row in banded.collect():
-        buckets.setdefault((row.band, row.bh), []).append(row.doc_id)
-    for mb in (1, 2, 3, 1000):
-        want = set()
-        for ids in buckets.values():
-            if 2 <= len(ids) <= mb:
-                ids = sorted(ids)
-                for i in range(len(ids)):
-                    for j in range(i + 1, len(ids)):
-                        want.add((ids[i], ids[j]))
-        got = {
-            (row.id_a, row.id_b)
-            for row in lsh_candidate_pairs(
-                sigs, id_col="doc_id", num_perm=8, bands=4, max_bucket=mb
-            ).collect()
-        }
-        assert got == want, f"max_bucket={mb}"
-    assert want, "fixture must produce candidate pairs at mb=1000"
-    # the unguarded (None) self-join path: all pairs, no size cap
-    got_none = {
-        (row.id_a, row.id_b)
-        for row in lsh_candidate_pairs(
-            sigs, id_col="doc_id", num_perm=8, bands=4, max_bucket=None
-        ).collect()
-    }
-    want_none = set()
-    for ids in buckets.values():
-        ids = sorted(ids)
-        for i in range(len(ids)):
-            for j in range(i + 1, len(ids)):
-                want_none.add((ids[i], ids[j]))
-    assert got_none == want_none
-    spark.catalog.clearCache()  # the None path persists banded
-
-
-def test_minhash_incremental_bucket_matches_join_form(spark):
-    """r13 incremental-admission rewrite: the bucket-collect path
-    (guarded) must emit the identical (id, kept, matched_id) rows as
-    the retained all×new join path (max_bucket=None) at a guard wide
-    enough to bind nothing, and respect the size guard when it
-    binds. Fixture includes old-only dup clusters (exercising the
-    has-new bucket filter), new-vs-history matches, and new-vs-new
-    ordering."""
-    from convert_parquet_to_csv_spark.operators.dedup import (
-        minhash_dedup_incremental,
-    )
-
-    docs = [
-        (1, "alpha beta gamma delta epsilon zeta"),   # history
-        (2, "alpha beta gamma delta epsilon zeta"),   # history dup (old-only pair)
-        (7, "alpha beta gamma delta epsilon zeta"),   # new, matches history
-        (14, "one two three four five six seven"),    # new
-        (21, "one two three four five six seven"),    # new, matches 14
-        (3, "totally different content here now"),    # history singleton
-        (28, "fresh unmatched new document body"),    # new singleton
-    ]
-    df = spark.createDataFrame(docs, _DOC_SCHEMA)
-    is_new = (F.col("doc_id") % 7) == 0
-    guarded = {
-        tuple(r)
-        for r in minhash_dedup_incremental(
-            df, is_new, k=2, num_perm=8, bands=4, max_bucket=1000
-        ).collect()
-    }
-    spark.catalog.clearCache()
-    join_form = {
-        tuple(r)
-        for r in minhash_dedup_incremental(
-            df, is_new, k=2, num_perm=8, bands=4, max_bucket=None
-        ).collect()
-    }
-    spark.catalog.clearCache()
-    assert guarded == join_form and guarded
-    by_id = {r[0]: r for r in guarded}
-    assert by_id[7][1] is False and by_id[7][2] in (1, 2)  # history match
-    assert by_id[14][1] is True  # smallest of the new pair survives
-    assert by_id[21] == (21, False, 14)
-    assert by_id[28][1] is True
-    # a guard of 1 drops every bucket (all pair-productive buckets
-    # have >= 2 members) => every new doc is kept
-    all_kept = {
-        tuple(r)
-        for r in minhash_dedup_incremental(
-            df, is_new, k=2, num_perm=8, bands=4, max_bucket=1
-        ).collect()
-    }
-    spark.catalog.clearCache()
-    assert all_kept == {(7, True, None), (14, True, None),
-                        (21, True, None), (28, True, None)}
-
-
-def test_simhash_bucket_explode_matches_reference(spark):
-    """r13 simhash_pairs rewrite (the lsh bucket-explode applied to
-    its structural twin): pair set + hamming values must equal
-    reference generation from collected buckets at every guard value,
-    and the None path must agree at an unbinding guard."""
-    from convert_parquet_to_csv_spark.operators.dedup import (
-        simhash_pairs,
-        simhash_signatures,
-    )
-
-    df = spark.createDataFrame(LSH_DOCS, _DOC_SCHEMA)
-    sigs = simhash_signatures(df, id_col="doc_id")
-    rows = sigs.collect()
-    width = 64 // 4
-    mask = (1 << width) - 1
-    buckets: dict = {}
-    u64 = (1 << 64) - 1
-    for row in rows:
-        # Spark longs arrive signed: emulate shiftrightunsigned /
-        # bit_count over the unsigned 64-bit view.
-        for c in range(4):
-            cv = ((row.simhash & u64) >> (c * width)) & mask
-            buckets.setdefault((c, cv), []).append((row.doc_id, row.simhash))
-    for mb in (1, 2, 3, 1000):
-        want = set()
-        for members in buckets.values():
-            if 2 <= len(members) <= mb:
-                ms = sorted(members)
-                for i in range(len(ms)):
-                    for j in range(i + 1, len(ms)):
-                        h = bin((ms[i][1] ^ ms[j][1]) & ((1 << 64) - 1)).count("1")
-                        if h <= 3:
-                            want.add((ms[i][0], ms[j][0], h))
-        got = {
-            (row.id_a, row.id_b, row.hamming)
-            for row in simhash_pairs(
-                sigs, id_col="doc_id", max_bucket=mb
-            ).collect()
-        }
-        assert got == want, f"max_bucket={mb}"
-    assert want, "fixture must produce simhash pairs at mb=1000"
-    got_none = {
-        (row.id_a, row.id_b, row.hamming)
-        for row in simhash_pairs(
-            sigs, id_col="doc_id", max_bucket=None
-        ).collect()
-    }
-    assert got_none == want  # no bucket exceeds 1000 on this fixture
-    spark.catalog.clearCache()  # the None path persists chunked
 
 
 def _count_nodes(path: str, pattern: str) -> int:

@@ -227,3 +227,21 @@ def test_split_by_group_null_group_rows_are_labeled(spark):
     assert len(out) == 5
     null_splits = {r["split"] for r in out if r["grp"] is None}
     assert len(null_splits) == 1  # the NULL group is one group
+
+
+def test_threshold_exact_n_when_range_bounds_resample(spark):
+    """The threshold strategy ranks over a ``repartitionByRange``
+    exchange whose bounds are re-sampled per job; per-partition
+    offsets counted in one job must not be applied to another job's
+    partitions. Partitions larger than the range sampler's sample
+    (the small fixtures are not) make the bounds differ between
+    jobs, so this input shows a wrong row count unless the ranked
+    frame is pinned once."""
+    df = spark.range(400_000, numPartitions=8)
+    for n in (50_000, 100_000):
+        a = sample_exact_n(df, n, seed=721, strategy="threshold")
+        b = sample_exact_n(df, n, seed=721, strategy="threshold")
+        sa = a.agg(F.count("*").alias("n"), F.sum("id").alias("s")).first()
+        sb = b.agg(F.count("*").alias("n"), F.sum("id").alias("s")).first()
+        assert sa["n"] == n and sb["n"] == n
+        assert sa["s"] == sb["s"]
