@@ -46,6 +46,12 @@ from convert_parquet_to_csv_spark.functions.text import (
     token_count_bpe,
     tokens,
 )
+from convert_parquet_to_csv_spark.operators.dedup import (
+    _coverage_arrays,
+    _covered,
+    _gram_positions,
+    _reassemble_minus_positions,
+)
 
 
 def benchmark_ngrams(
@@ -68,42 +74,29 @@ def _hashed_ngram_table(
     id_cols: list[str],
     text_col: str,
     n: int,
-    keep_slices: bool = False,
+    slice_len: int | None = None,
 ) -> DataFrame:
     """(id_cols..., gram: long) — positional word n-grams hashed as
     raw TOKEN SLICE ARRAYS (xxhash64 over array<string>), never built
-    as strings. The string path (``ngrams()``) constructs every gram
-    via a per-doc HOF lambda (transform + array_join) — the measured
-    slow class (see dedup._hashed_shingle_table and the C4 span
-    rewrite); here the explode emits start positions and the hash
-    runs on ``slice(tokens, p, n)`` inside a codegen projection.
-    Matches ngrams() semantics: lowercased, duplicates kept (one row
-    per position), docs shorter than ``n`` yield nothing.
+    as strings: the span family's :func:`~.dedup._gram_positions`
+    stream over lowercased tokens. The string path (``ngrams()``)
+    constructs every gram via a per-doc HOF lambda (transform +
+    array_join) — the measured slow class (see
+    dedup._hashed_shingle_table and the C4 span rewrite). Matches
+    ngrams() semantics: lowercased, duplicates kept (one row per
+    position), docs shorter than ``n`` yield nothing.
 
-    ``keep_slices=True`` additionally carries the token slice itself
-    as ``_gtoks`` (array<string>) so a caller can verify hash matches
+    ``slice_len=n`` additionally carries the token slice itself as
+    ``_s`` (array<string>) so a caller can verify hash matches
     exactly. Only safe when the consumer stays in the same stage (a
     broadcast join): the slices then never cross an exchange."""
-    toks = tokens(F.lower(F.col(text_col)))
-    base = df.select(*id_cols, toks.alias("_tk"))
-    cnt = F.size("_tk")
-    starts = F.when(
-        cnt >= n, F.sequence(F.lit(1), cnt - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    exploded = base.select(
-        *id_cols, F.explode(starts).alias("_p"), "_tk"
+    base = df.select(
+        *id_cols, tokens(F.lower(F.col(text_col))).alias("_tk")
     )
-    slice_expr = F.expr(f"slice(_tk, _p, {n})")
-    if keep_slices:
-        return exploded.select(
-            *id_cols,
-            slice_expr.alias("_gtoks"),
-        ).select(
-            *id_cols, "_gtoks", F.xxhash64("_gtoks").alias("gram")
-        )
-    return exploded.select(
-        *id_cols,
-        F.xxhash64(slice_expr).alias("gram"),
+    return (
+        _gram_positions(base, n, slice_len)
+        .drop("_p")
+        .withColumnRenamed("_gh", "gram")
     )
 
 
@@ -173,11 +166,11 @@ def flag_contaminated(
         .withColumn("_h", F.xxhash64("_btoks"))
     )
     grams = _hashed_ngram_table(
-        docs, [id_col], text_col, n, keep_slices=True
+        docs, [id_col], text_col, n, slice_len=n
     ).withColumnRenamed("gram", "_h")
     return (
         grams.join(F.broadcast(bench), "_h")
-        .filter(F.col("_gtoks") == F.col("_btoks"))
+        .filter(F.col("_s") == F.col("_btoks"))
         .groupBy(id_col)
         .agg(F.count_distinct("gram").alias("n_overlap"))
     )
@@ -340,8 +333,7 @@ def remove_duplicated_spans(
     (try/finally; the coverage table is eagerly localCheckpoint'ed,
     so the default path runs its heavy stages at call time and the
     returned plan is the cheap reassembly tail). Callers need no
-    ``spark.catalog.clearCache()`` — unlike ``lsh_candidate_pairs``,
-    whose returned plan still references its cache.
+    ``spark.catalog.clearCache()``.
 
     Measured design change (r5, ``tools/span_reassembly_ab.py``,
     interleaved cache-cleared min-of-2, full clean_text output): this
@@ -419,23 +411,10 @@ def remove_duplicated_spans(
     scale-curve artifact are noise-window captures (same code,
     same corpus, minutes apart), not superlinearity.
     """
-    if n < 1:
-        raise ValueError(f"span width must be >= 1, got {n}")
     arr = docs.select(
-        id_col, F.split(F.col(text_col), " ").alias("_a")
+        id_col, F.split(F.col(text_col), " ").alias("_tk")
     )
-    starts = F.when(
-        F.size("_a") >= n, F.sequence(F.lit(0), F.size("_a") - n)
-    ).otherwise(F.array().cast("array<int>"))
-    grams = arr.select(
-        id_col,
-        F.explode(starts).alias("pos"),
-        F.col("_a"),
-    ).select(
-        id_col,
-        "pos",
-        F.xxhash64(F.expr(f"slice(_a, pos + 1, {n})")).alias("gram"),
-    )
+    grams = _gram_positions(arr, n)
     # Total-count pre-filter: the only full-volume exchange. Its
     # survivors (total occurrences > max_docs) are a superset of the
     # hot set; the exact distinct-doc count then runs candidate-sized.
@@ -444,14 +423,14 @@ def remove_duplicated_spans(
     # repeats counting — the total-count exchange then IS the hot
     # set and the distinct-doc stage disappears entirely.
     cand = (
-        grams.groupBy("gram")
+        grams.groupBy("_gh")
         .agg(F.count(F.lit(1)).alias("_ct"))
         .filter(
             (F.col("_ct") >= min_total)
             if min_total is not None
             else (F.col("_ct") > max_docs)
         )
-        .select("gram")
+        .select("_gh")
     )
     # r12 optimization round, two changes measured together (500k
     # corpus, 5-round interleaved: min 6.63 -> 5.59 s, median 8.87 ->
@@ -479,26 +458,13 @@ def remove_duplicated_spans(
     #    before-dumps show no distinct aggregate and identical
     #    exchange structure. Code hygiene only, zero plan delta; the
     #    family's measured r12 win belongs to change 1 alone.
-    # `covered` shares lineage with `arr`, so joining on same-named
-    # columns would trip Spark's "trivially true equals predicate"
-    # auto-disambiguation warning (harmless but log-spam) — the
-    # coverage side's key columns are renamed instead.
-    def _cov_per_doc(hot_occ: DataFrame) -> DataFrame:
-        covered = hot_occ.select(
-            F.col(id_col).alias("_cid"),
-            F.explode(
-                F.sequence(F.col("pos"), F.col("pos") + (n - 1))
-            ).alias("cpos"),
-        )
-        return covered.groupBy("_cid").agg(
-            F.collect_set("cpos").alias("_cov")
-        )
-
     if min_total is not None:
         # ExactSubstr rule: the total-count survivors ARE the hot set;
         # single consumer of the gram stream, nothing to persist, the
         # whole plan stays lazy.
-        cov_per_doc = _cov_per_doc(grams.join(cand, "gram"))
+        cov = _coverage_arrays(
+            _covered(grams.join(cand, "_gh"), id_col, n), id_col
+        )
     else:
         # r13 (VERDICT r12 items 5/7): g2's cache no longer outlives
         # the call. Both g2 consumers — the exact distinct-count pass
@@ -521,37 +487,21 @@ def remove_duplicated_spans(
         # extra small job (+0.5 s median) inside the key's 30-40%
         # box spread; the same-round bench-protocol trend still read
         # 10.79 -> 6.86 s (numbers in OPTIMIZATION_r13.md section 7).
-        g2 = grams.join(cand, "gram").persist()
+        g2 = grams.join(cand, "_gh").persist()
         try:
             hot = (
-                g2.groupBy("gram")
+                g2.groupBy("_gh")
                 .agg(F.count_distinct(F.col(id_col)).alias("_nd"))
                 .filter(F.col("_nd") > max_docs)
-                .select("gram")
+                .select("_gh")
             )
-            cov_per_doc = _cov_per_doc(g2.join(hot, "gram")).localCheckpoint()
+            cov = _coverage_arrays(
+                _covered(g2.join(hot, "_gh"), id_col, n), id_col
+            ).localCheckpoint()
         finally:
             g2.unpersist()
-    joined = arr.join(
-        cov_per_doc, F.col(id_col) == F.col("_cid"), "left"
-    )
-    # 0-based transform index matches the 0-based gram start
-    # positions; NULL `_cov` = doc has no covered span.
-    kept = F.expr(
-        "filter(transform(_a, (w, i) -> CASE WHEN _cov IS NULL OR NOT "
-        "array_contains(_cov, i) THEN w END), x -> x IS NOT NULL)"
-    )
-    # NULL text ⇒ _a/kept are NULL: concat_ws would render '' and
-    # size() NULL — pin NULL clean_text + zero counts instead.
-    return joined.select(
-        F.col(id_col),
-        F.when(F.col("_a").isNull(), F.lit(None).cast("string"))
-        .otherwise(F.concat_ws(" ", kept))
-        .alias("clean_text"),
-        F.coalesce(F.size(kept), F.lit(0)).cast("bigint").alias("n_kept"),
-        F.coalesce(F.size("_a") - F.size(kept), F.lit(0))
-        .cast("bigint")
-        .alias("n_removed"),
+    return _reassemble_minus_positions(
+        arr, cov, id_col, "_tk", " ", "n_kept", "n_removed"
     )
 
 

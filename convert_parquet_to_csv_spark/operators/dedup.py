@@ -853,6 +853,71 @@ def fuzzy_title_pairs(
 # --------------------------------------------------------------------------
 # exact-substring duplicated-span extents (Lee et al. 2022, ExactSubstr)
 # --------------------------------------------------------------------------
+#
+# The span family (duplicated_span_extents, maximal_duplicated_extents,
+# remove_within_doc_repeats, remove_duplicated_lines, the cross-set
+# contamination operators, curation.remove_duplicated_spans and
+# curation._hashed_ngram_table) shares its positional steps through the
+# helpers below; tokenization stays with each caller.
+
+def _gram_positions(
+    base: DataFrame, k: int, slice_len: int | None = None
+) -> DataFrame:
+    """The span family's positional k-gram stream. ``base`` holds
+    carry columns plus a ``_tk`` token array; the result holds the
+    carry columns, ``_p`` (the gram's 0-based start position, which is
+    the reassembly lambda's index), ``_gh`` (``xxhash64`` of the
+    k-token slice — the slice array is hashed directly, no gram string
+    and no separator ambiguity) and, when ``slice_len`` is given,
+    ``_s`` (the slice capped at ``slice_len`` tokens).
+
+    Docs with fewer than ``k`` tokens emit nothing (the filter also
+    guards Spark's ``sequence(0, negative)``, which counts DOWNWARD),
+    and so does a NULL token array. ``k < 1`` raises ``ValueError``
+    when the plan is built: a zero-width gram would report
+    position -1 spans, and a negative one fails inside the executor."""
+    if k < 1:
+        raise ValueError(f"span width must be >= 1, got {k}")
+    carry = [c for c in base.columns if c != "_tk"]
+    gram = F.expr(f"slice(_tk, _p + 1, {k})")
+    cols = [*carry, "_p", F.xxhash64(gram).alias("_gh")]
+    if slice_len is not None:
+        cols.append(F.expr(f"slice(_tk, _p + 1, {slice_len})").alias("_s"))
+    return (
+        base.filter(F.size("_tk") >= k)
+        .select(
+            *carry,
+            F.explode(F.sequence(F.lit(0), F.size("_tk") - k)).alias("_p"),
+            "_tk",
+        )
+        .select(*cols)
+    )
+
+
+def _covered(occ: DataFrame, id_col: str, k: int) -> DataFrame:
+    """``(id, _rp)``: the k token positions each gram occurrence of
+    ``occ`` (an ``(id, _p)`` stream) covers, 0-based. Overlapping
+    occurrences repeat positions; consumers dedup."""
+    return occ.select(
+        F.col(id_col),
+        F.explode(F.sequence(F.col("_p"), F.col("_p") + k - 1)).alias("_rp"),
+    )
+
+
+def _lcp(s: str, nb: Column) -> Column:
+    """Longest common prefix, in tokens, of the array column ``s`` and
+    the neighbor array ``nb``; 0 when ``nb`` is NULL.
+    ``array_position`` returns 0 — not NULL — when ``false`` is absent
+    (identical slices), so the ``nullif`` is load-bearing: without it
+    every full-cap match read lcp = -1 (test_lcp_identical_slices)."""
+    zipped = F.zip_with(s, nb, lambda x, y: x.eqNullSafe(y))
+    return F.when(nb.isNull(), F.lit(0)).otherwise(
+        F.coalesce(
+            F.nullif(F.array_position(zipped, F.lit(False)), F.lit(0)) - 1,
+            F.least(F.size(s), F.size(nb)),
+        )
+    )
+
 
 def duplicated_span_extents(
     df: DataFrame,
@@ -903,17 +968,8 @@ def duplicated_span_extents(
     hotness rule keeps the single full-volume exchange map-side-
     combinable (cf. remove_duplicated_spans' measured note on why
     the distinct-doc rule is the expensive one)."""
-    base = df.select(id_col, tokens(text_col).alias("_tk")).filter(
-        F.size("_tk") >= k
-    )
-    grams = base.select(
-        id_col,
-        F.explode(F.sequence(F.lit(0), F.size("_tk") - k)).alias("_p"),
-        "_tk",
-    ).select(
-        id_col,
-        "_p",
-        F.xxhash64(F.expr(f"slice(_tk, _p + 1, {k})")).alias("_h"),
+    grams = _gram_positions(
+        df.select(id_col, tokens(text_col).alias("_tk")), k
     )
     # grams feeds the hot-count AND the coverage join — persist so the
     # tokenize+explode runs once. Caller releases via clearCache() —
@@ -924,28 +980,19 @@ def duplicated_span_extents(
     # clearCache between runs).
     grams = grams.persist()
     hot = (
-        grams.groupBy("_h")
+        grams.groupBy("_gh")
         .agg(F.count(F.lit(1)).alias("_c"))
         .filter(F.col("_c") >= min_count)
-        .select("_h")
+        .select("_gh")
     )
-    covered = (
-        grams.join(hot, "_h")
-        .select(
-            id_col,
-            F.explode(
-                F.sequence(F.col("_p"), F.col("_p") + k - 1)
-            ).alias("pos"),
-        )
-        .distinct()
-    )
-    w = Window.partitionBy(id_col).orderBy("pos")
+    covered = _covered(grams.join(hot, "_gh"), id_col, k).distinct()
+    w = Window.partitionBy(id_col).orderBy("_rp")
     islands = covered.withColumn(
-        "_grp", F.col("pos") - F.row_number().over(w)
+        "_grp", F.col("_rp") - F.row_number().over(w)
     )
     return islands.groupBy(id_col, "_grp").agg(
-        F.min("pos").cast("bigint").alias("span_start"),
-        (F.max("pos") + 1).cast("bigint").alias("span_end"),
+        F.min("_rp").cast("bigint").alias("span_start"),
+        (F.max("_rp") + 1).cast("bigint").alias("span_end"),
         F.count(F.lit(1)).cast("bigint").alias("span_toks"),
     ).select(id_col, "span_start", "span_end", "span_toks")
 
@@ -957,7 +1004,6 @@ def maximal_duplicated_extents(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_count: int = 2,
-    sort_partitions: int | None = None,
     count_partitions: int | None = None,
 ) -> DataFrame:
     """TRUE-maximal duplicated substrings (VERDICT r8 item 4 — the
@@ -1051,30 +1097,10 @@ def maximal_duplicated_extents(
     sort partitions fit the task heap, which is exactly the
     spill-aware sizing rule a 100 TB deployment applies
     (SURVEY §2's "size shuffle partitions to executor memory");
-    code untouched, conf only.
-
-    ``sort_partitions`` ships PART of that knob per-kernel (r11
-    late-session): when set, the gram-window slice exchange and the
-    doc-window suppression exchange become explicit
-    ``repartition(sort_partitions, key)`` — hash partitioning on the
-    window key SATISFIES each window's required distribution, so
-    EnsureRequirements inserts no second exchange (same exchange
-    count, wider; result identical by construction — per-key groups
-    never split; both pinned in the knob test). What the parameter
-    canNOT reach is the hot-count groupBy's REDUCE width — an
-    aggregation exchange always follows the session conf, and a
-    repartition before it would forfeit map-side combine (the wrong
-    trade on dup-heavy real corpora). Measured decomposition
-    (time-varying box, every comparison interleaved min-of-2 at 2M
-    docs): conf 32→128 reproduced **135.1 → 72.9 s (1.85×)**;
-    conf32+knob128 vs conf128 read 130.2 vs 87.4 s — i.e. on the
-    curve corpus (per-copy-mangled ⇒ grams near-distinct ⇒ the
-    count agg's reduce side is ~corpus-volume and spills at width
-    32) the session conf remains the full lever, exactly the
-    spill-aware deployment rule the module prescribes; the knob
-    covers the window share for mixed workloads whose session conf
-    must stay small. Default ``None`` keeps the gated plan
-    byte-identical to r10's.
+    code untouched, conf only. Widening the two window exchanges
+    instead adds nothing: that knob (``sort_partitions``) measured
+    85.6 s against 83.6 s for ``count_partitions`` alone at 2M docs
+    and was deleted (OPTIMIZATION_r13.md §1).
 
     The FULL lever is now in the API (r12, VERDICT r11 item 4):
     ``session.scoped_shuffle_partitions(spark, 128)`` — a set/
@@ -1114,19 +1140,8 @@ def maximal_duplicated_extents(
     ``None`` path's conf-width aggregate is already small. Default
     ``None`` keeps the gated plan byte-identical.
     """
-    slice_len = k + w_cap
-    base = df.select(id_col, tokens(text_col).alias("_tk")).filter(
-        F.size("_tk") >= k
-    )
-    occ = base.select(
-        id_col,
-        F.explode(F.sequence(F.lit(0), F.size("_tk") - k)).alias("_p"),
-        "_tk",
-    ).select(
-        id_col,
-        "_p",
-        F.expr(f"slice(_tk, _p + 1, {slice_len})").alias("_s"),
-        F.xxhash64(F.expr(f"slice(_tk, _p + 1, {k})")).alias("_gh"),
+    occ = _gram_positions(
+        df.select(id_col, tokens(text_col).alias("_tk")), k, k + w_cap
     )
     # Hot-gram pre-filter — EXACT, not an approximation: a position
     # whose leading k-gram occurs once corpus-wide has no partner
@@ -1173,10 +1188,6 @@ def maximal_duplicated_extents(
         .select("_gh")
     )
     occ = occ.join(hot, "_gh")
-    if sort_partitions is not None:
-        if sort_partitions < 1:
-            raise ValueError("sort_partitions must be >= 1")
-        occ = occ.repartition(sort_partitions, "_gh")
     # Order by the token ARRAY itself — element-wise lexicographic in
     # both engines. (A space-joined string is NOT order-equivalent
     # when tokens contain non-whitespace chars below 0x20 — legal in
@@ -1185,29 +1196,13 @@ def maximal_duplicated_extents(
     lag_s = F.lag("_s").over(wg)
     lead_s = F.lead("_s").over(wg)
 
-    def lcp_with(nb: Column) -> Column:
-        # array_position returns 0 — not NULL — when `false` is
-        # absent (identical slices), so nullif is load-bearing: the
-        # first cut lost every full-cap match to lcp = -1 (caught by
-        # the sf0.01 gate; test_lcp_identical_slices pins it).
-        zipped = F.zip_with("_s", nb, lambda x, y: x.eqNullSafe(y))
-        return F.when(nb.isNull(), F.lit(0)).otherwise(
-            F.coalesce(
-                F.nullif(
-                    F.array_position(zipped, F.lit(False)), F.lit(0)
-                )
-                - 1,
-                F.least(F.size("_s"), F.size(nb)),
-            )
-        )
-
     if min_count == 2:
         # the r9-measured plan: e_{i-1} = lcp with lag, e_i = lcp
         # with lead — the windowed-max below, unrolled
         scored = occ.select(
             id_col,
             "_p",
-            F.greatest(lcp_with(lag_s), lcp_with(lead_s))
+            F.greatest(_lcp("_s", lag_s), _lcp("_s", lead_s))
             .cast("bigint")
             .alias("_l"),
         )
@@ -1232,7 +1227,7 @@ def maximal_duplicated_extents(
         wgt = Window.partitionBy("_gh").orderBy(*total_order)
         wmax = wgt.rowsBetween(-(min_count - 1), 0)
         scored = occ.withColumn(
-            "_e", lcp_with(F.lead("_s", min_count - 1).over(wgt))
+            "_e", _lcp("_s", F.lead("_s", min_count - 1).over(wgt))
         ).select(
             id_col,
             "_p",
@@ -1244,11 +1239,6 @@ def maximal_duplicated_extents(
     # and could never suppress; requiring lag(_p) == p−1 alongside
     # the L comparison is therefore exact.
     wd = Window.partitionBy(id_col).orderBy("_p")
-    if sort_partitions is not None:
-        # widen the suppression window's exchange too — the conf A/B
-        # widened every exchange, and capturing only the gram window
-        # left half the win on the table (measured below)
-        scored = scored.repartition(sort_partitions, id_col)
     return (
         scored.withColumn("_pprev", F.lag("_p").over(wd))
         .withColumn("_lprevraw", F.lag("_l").over(wd))
@@ -1312,32 +1302,38 @@ def keep_best_per_cluster(
     )
 
 
+def _coverage_arrays(removals: DataFrame, id_col: str) -> DataFrame:
+    """First reassembly step: ``removals`` is ``(id_col, _rp)`` —
+    removed 0-based element positions, duplicates allowed
+    (``collect_set`` dedups in its one exchange) — collapsed to ONE
+    position array per doc, ``(_rid, _cov)``. The key is RENAMED so
+    the join back to the same-lineage doc table never relies on
+    Spark's ambiguous-self-join auto-disambiguation."""
+    return removals.groupBy(F.col(id_col).alias("_rid")).agg(
+        F.collect_set("_rp").alias("_cov")
+    )
+
+
 def _reassemble_minus_positions(
     base: DataFrame,
-    removals: DataFrame,
+    cov: DataFrame,
     id_col: str,
     arr_col: str,
     sep: str,
     kept_alias: str,
     removed_alias: str,
 ) -> DataFrame:
-    """Order-preserving ARRAY-NATIVE reassembly shared by the
-    repeated-span/line removal family (r8 review: the pattern was
-    copy-pasted between the within-doc and line operators — one
-    helper now pins the family contract in one place). ``removals``
-    is ``(id_col, _rp)`` — removed 0-based element positions,
-    duplicates allowed (``collect_set`` dedups in its one exchange).
-    Collapse to ONE position array per doc, left-join back at doc
-    granularity on a RENAMED key (same-lineage same-name equi-joins
-    must not rely on Spark's ambiguous-self-join
-    auto-disambiguation), filter the element array with an index
-    lambda, and close with the family NULL contract: NULL array →
-    (NULL, 0, 0). This form measured 2.2–3.3× faster than shipping
-    every element as a (pos, value) struct (r5 span A/B, re-measured
-    r8 on the within-doc operator)."""
-    cov = removals.groupBy(F.col(id_col).alias("_rid")).agg(
-        F.collect_set("_rp").alias("_cov")
-    )
+    """Second reassembly step, order-preserving and ARRAY-NATIVE:
+    left-join the :func:`_coverage_arrays` table ``cov`` back to
+    ``base`` at doc granularity, filter the element array ``arr_col``
+    with an index lambda (0-based, the gram start positions' base; a
+    NULL ``_cov`` means nothing is removed), and re-join the kept
+    elements with ``sep``. Output ``(id, clean_text, kept_alias,
+    removed_alias)`` for every base row, with the family NULL
+    contract: a NULL array gives ``(NULL, 0, 0)``, never '' with NULL
+    counts. This form measured 2.2–3.3× faster than shipping every
+    element as a (pos, value) struct (r5 span A/B, re-measured r8 on
+    the within-doc operator)."""
     joined = base.join(cov, F.col(id_col) == F.col("_rid"), "left")
     kept = F.expr(
         f"filter(transform({arr_col}, (e, i) -> CASE WHEN _cov IS "
@@ -1385,10 +1381,11 @@ def remove_within_doc_repeats(
     ``xxhash64(slice)``; first occurrence per (doc, gram) = one
     map-side-combinable ``min(pos)`` groupBy; repeats join back on
     (doc, gram) with ``pos > first_pos``; covered positions explode
-    k-wide and feed :func:`_reassemble_minus_positions` — the
-    family-shared array-native reassembly (one ``collect_set``
-    exchange dedups overlapping coverage, renamed-key doc-level
-    join, filter-with-index lambda over the token array), the form
+    k-wide and feed :func:`_coverage_arrays` and
+    :func:`_reassemble_minus_positions` — the family-shared
+    array-native reassembly (one ``collect_set`` exchange dedups
+    overlapping coverage, renamed-key doc-level join,
+    filter-with-index lambda over the token array), the form
     remove_duplicated_spans' r5 A/B measured 2.2–2.6× faster than
     shuffling every word as a (pos, word) struct (this operator's
     first cut used the word-stream form; review r8 pointed back at
@@ -1411,31 +1408,15 @@ def remove_within_doc_repeats(
     # cross-contaminate each other's "first occurrence" while their
     # removals lose the join back. Same exclusion contract as
     # remove_duplicated_lines / train_linear_classifier.
-    grams = base.filter(
-        (F.size("_tk") >= k) & F.col(id_col).isNotNull()
-    ).select(
-        id_col,
-        F.explode(F.sequence(F.lit(0), F.size("_tk") - k)).alias("_p"),
-        "_tk",
-    ).select(
-        id_col,
-        "_p",
-        F.xxhash64(F.expr(f"slice(_tk, _p + 1, {k})")).alias("_h"),
-    )
-    first = grams.groupBy(id_col, "_h").agg(F.min("_p").alias("_fp"))
-    repeats = grams.join(first, [id_col, "_h"]).filter(
+    grams = _gram_positions(base.filter(F.col(id_col).isNotNull()), k)
+    first = grams.groupBy(id_col, "_gh").agg(F.min("_p").alias("_fp"))
+    repeats = grams.join(first, [id_col, "_gh"]).filter(
         F.col("_p") > F.col("_fp")
     )
-    covered = repeats.select(
-        F.col(id_col),
-        F.explode(F.sequence(F.col("_p"), F.col("_p") + k - 1)).alias(
-            "_rp"
-        ),
-    )
-    # 0-based positions match the transform index in the shared
-    # reassembly; NULL coverage = doc has no repeated span.
     return _reassemble_minus_positions(
-        base, covered, id_col, "_tk", " ", "n_kept", "n_removed"
+        base,
+        _coverage_arrays(_covered(repeats, id_col, k), id_col),
+        id_col, "_tk", " ", "n_kept", "n_removed",
     )
 
 
@@ -1469,10 +1450,11 @@ def remove_duplicated_lines(
     (the single data-scale exchange; a mega-hot boilerplate line is
     the AQE skew-join case — the winners side is one row per line,
     so splitting the hot partition replicates one row); removed
-    positions feed :func:`_reassemble_minus_positions`, the
-    family-shared array-native reassembly (measured 2.2–3.3× faster
-    than word-stream shuffles). Three keyed exchanges total, no corpus-global state,
-    no window anywhere — partitions at any corpus size. Measured
+    positions feed :func:`_coverage_arrays` and
+    :func:`_reassemble_minus_positions`, the family-shared
+    array-native reassembly (measured 2.2–3.3× faster than
+    word-stream shuffles). Three keyed exchanges total, no
+    corpus-global state, no window anywhere — partitions at any corpus size. Measured
     (mangled sf0.1 replicas incl. 4-token line synthesis, min-of-2,
     local[32]): 12.4 / 21.6 / 38.1 s at 500k / 1M / 2M docs —
     0.77×-LINEAR (sub-linear), the flattest curve in the
@@ -1514,7 +1496,7 @@ def remove_duplicated_lines(
     )
     return _reassemble_minus_positions(
         base,
-        removals,
+        _coverage_arrays(removals, id_col),
         id_col,
         "_ln",
         "\n",
@@ -1768,24 +1750,13 @@ def _xset_position_frame(
     tables. Expressions identical to the r10 kernel; the plan is
     unchanged up to column pruning."""
     bench_id = bench_id_col or id_col
-    slice_len = k + w_cap
 
     def occ_of(df: DataFrame, idc: str, side: int) -> DataFrame:
         base = df.select(
             F.col(idc).alias("_id"), tokens(text_col).alias("_tk")
-        ).filter(F.size("_tk") >= k)
-        return base.select(
-            "_id",
-            F.explode(
-                F.sequence(F.lit(0), F.size("_tk") - k)
-            ).alias("_p"),
-            "_tk",
-        ).select(
-            "_id",
-            "_p",
-            F.expr(f"slice(_tk, _p + 1, {slice_len})").alias("_s"),
-            F.xxhash64(F.expr(f"slice(_tk, _p + 1, {k})")).alias("_gh"),
-            F.lit(side).alias("_side"),
+        )
+        return _gram_positions(base, k, k + w_cap).withColumn(
+            "_side", F.lit(side)
         )
 
     occ_c = occ_of(docs, id_col, 0)
@@ -1832,24 +1803,6 @@ def _xset_position_frame(
     )
 
 
-def _xset_lcp_against(nb: Column) -> Column:
-    """LCP of the corpus slice ``_s`` against a neighbor struct's
-    ``_bs`` (0 when the neighbor is NULL) — the r10 expression,
-    shared by the from-scratch and merged-position paths."""
-    zipped = F.zip_with(
-        "_s", nb["_bs"], lambda x, y: x.eqNullSafe(y)
-    )
-    return F.when(nb.isNull(), F.lit(0)).otherwise(
-        F.coalesce(
-            F.nullif(
-                F.array_position(zipped, F.lit(False)), F.lit(0)
-            )
-            - 1,
-            F.least(F.size("_s"), F.size(nb["_bs"])),
-        )
-    )
-
-
 def _xset_scored(frame: DataFrame, k: int) -> DataFrame:
     """Neighbor frame → per-position ``(_l, _partner)`` with the
     ``>= k`` report filter — the r10 scoring expressions (partner
@@ -1863,8 +1816,9 @@ def _xset_scored(frame: DataFrame, k: int) -> DataFrame:
             "_s",
             "_up",
             "_dn",
-            _xset_lcp_against(F.col("_up")).cast("bigint").alias("_lu"),
-            _xset_lcp_against(F.col("_dn")).cast("bigint").alias("_ld"),
+            # a neighbor struct is NULL iff its slice ``_bs`` is
+            _lcp("_s", F.col("_up._bs")).cast("bigint").alias("_lu"),
+            _lcp("_s", F.col("_dn._bs")).cast("bigint").alias("_ld"),
             F.col("_up._bid").alias("_bu"),
             F.col("_dn._bid").alias("_bd"),
         )

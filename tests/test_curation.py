@@ -262,6 +262,64 @@ def test_remove_duplicated_spans_null_text_passthrough(spark):
         assert out[i] == ("", 0, 4)
 
 
+SPAN_DOCS = [
+    (1, "the same old footer text here and unique alpha words"),
+    (2, "other page body the same old footer text here trailing"),
+    (3, "third page the same old footer text here more stuff"),
+    (4, "totally unrelated content nothing shared at all"),
+    (5, ""),
+    (6, None),
+]
+
+
+def test_span_dedup_releases_cache_in_operator(spark):
+    """The candidate-gram cache is released inside the call: no
+    InMemoryRelation outlives it, and the returned plan stays
+    re-runnable after the internal unpersist."""
+    df = spark.createDataFrame(SPAN_DOCS, "doc_id LONG, text STRING")
+    spark.catalog.clearCache()
+    out = C.remove_duplicated_spans(df, n=3, max_docs=2)
+    rows = {r.doc_id: r for r in out.collect()}
+    # the shared footer span is removed from all three carriers
+    for i in (1, 2, 3):
+        assert "same old footer text here" not in (rows[i].clean_text or "")
+        assert rows[i].n_removed > 0
+    assert rows[4].clean_text == SPAN_DOCS[3][1]
+    assert rows[5].clean_text == "" and rows[5].n_removed == 0
+    assert rows[6].clean_text is None and rows[6].n_kept == 0
+    # the SQL cache manager must be empty (an earlier shape left the
+    # candidate-gram table pinned until the caller's clearCache())
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert {r.doc_id: r.n_removed for r in out.collect()} == {
+        i: rows[i].n_removed for i in rows
+    }
+
+
+def test_span_family_keeps_each_callers_tokenizer(spark):
+    """The span family shares its gram stream but not its tokenizer:
+    remove_duplicated_spans splits on single spaces, so a doubled or
+    leading space yields empty tokens that survive into clean_text,
+    while remove_within_doc_repeats uses tokens() and re-joins the
+    whitespace-normalized words."""
+    from convert_parquet_to_csv_spark.operators.dedup import (
+        remove_within_doc_repeats,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "x  y z"), (2, " lead q r s")], "doc_id LONG, text STRING"
+    )
+    spans = C.remove_duplicated_spans(df, n=2, max_docs=2)
+    assert sorted(map(tuple, spans.collect())) == [
+        (1, "x  y z", 4, 0),
+        (2, " lead q r s", 5, 0),
+    ]
+    within = remove_within_doc_repeats(df, k=2)
+    assert sorted(map(tuple, within.collect())) == [
+        (1, "x y z", 3, 0),
+        (2, "lead q r s", 4, 0),
+    ]
+
+
 def test_flag_contaminated_hashed_matches_string_path(spark, sf_small):
     """The 100 TB form (xxhash64 gram keys) must agree with the exact
     string-key path on real corpus data."""

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from convert_parquet_to_csv_spark.operators import curation as C
 from convert_parquet_to_csv_spark.operators import dedup as D
 
 BASE = (
@@ -1045,3 +1046,41 @@ def test_ahash_pairs_plan_has_no_cache_or_anti_join(spark):
     plan = buf.getvalue()
     assert "InMemoryRelation" not in plan and "LeftAnti" not in plan
     assert "collect_list" in plan
+
+
+_SPAN_WIDTH_OPS = {
+    "duplicated_span_extents": lambda df, k: D.duplicated_span_extents(
+        df, k=k
+    ),
+    "maximal_duplicated_extents": lambda df, k: (
+        D.maximal_duplicated_extents(df, k=k)
+    ),
+    "remove_within_doc_repeats": lambda df, k: (
+        D.remove_within_doc_repeats(df, k=k)
+    ),
+    "shared_extent_contamination": lambda df, k: (
+        D.shared_extent_contamination(df, df, k=k)
+    ),
+    "contamination_hit_positions": lambda df, k: (
+        D.contamination_hit_positions(df, df, k=k)
+    ),
+    "flag_contaminated": lambda df, k: C.flag_contaminated(df, df, n=k),
+    "flag_contaminated_hashed": lambda df, k: C.flag_contaminated(
+        df, df, n=k, hash_grams=True
+    ),
+}
+
+
+@pytest.mark.parametrize("k", [0, -1])
+def test_span_operators_reject_width_below_one(spark, k):
+    """A gram width below 1 is refused when the plan is built. Before
+    the check, k=0 reported an extent at position -1 on an all-unique
+    doc and removed every token, and k=-1 failed inside an executor
+    with INVALID_PARAMETER_VALUE.LENGTH."""
+    df = spark.createDataFrame(
+        [(1, "a b c a b c"), (2, "x y z")], "doc_id LONG, text STRING"
+    )
+    for name, build in _SPAN_WIDTH_OPS.items():
+        with pytest.raises(ValueError, match="span width"):
+            build(df, k)
+            pytest.fail(f"{name} accepted k={k}")

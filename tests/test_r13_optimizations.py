@@ -1,22 +1,17 @@
 """Equivalence pins + mechanized plan claims for the r13 optimization
-round (VERDICT r12 'Next round' items 1, 4, 6, 7).
+round: the gopher legacy-shape equivalence and the plan claims.
 
-1. ``maximal_duplicated_extents(count_partitions=...)``: the in-plan
-   hot-count width knob must not change a single output row at any
-   width combination.
-2. ``remove_duplicated_spans``: the candidate-gram cache is released
-   in-operator — the SQL cache manager is empty after the action (the
-   r12 shape left one InMemoryRelation pinned per call), and the
-   result is unchanged.
-3. ``_gopher_gram_masses(_consolidate=False)``: the A/B-only legacy
+1. ``_gopher_gram_masses(_consolidate=False)``: the A/B-only legacy
    exchange shape computes identical masses (so the r13 dup-heavy
    measurement compares equals).
-4. Plan-claim mechanization (VERDICT r12 item 4): every node-count
+2. Plan-claim mechanization (VERDICT r12 item 4): every node-count
    delta the r13 ledger claims is asserted against the committed
    ``plans/r13`` dumps via ``plans/r13/claims.json`` — an overstated
    claim fails the suite.
 
-The LSH bucket-pairing pins live in tests/test_dedup.py.
+The LSH bucket-pairing pins live in tests/test_dedup.py, the extents
+width pin in tests/test_maximal_extents.py and the span-dedup cache
+pin in tests/test_curation.py.
 """
 
 from __future__ import annotations
@@ -34,23 +29,9 @@ from pyspark.sql.types import (
 
 from convert_parquet_to_csv_spark.operators.curation import (
     _gopher_gram_masses,
-    remove_duplicated_spans,
-)
-from convert_parquet_to_csv_spark.operators.dedup import (
-    maximal_duplicated_extents,
 )
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-EXTENT_DOCS = [
-    (1, "a b c d e f g a b c d e f g"),  # within-doc repeat
-    (2, "x a b c d e f g y"),  # cross-doc repeat of the same run
-    (3, "a b c d e f g"),  # exactly the shared run
-    (4, ""),  # empty
-    (5, None),  # NULL text
-    (6, "one two three"),  # shorter than k
-    (7, "p q r s t u v w"),  # no duplicated grams
-]
 
 _DOC_SCHEMA = StructType(
     [
@@ -64,61 +45,6 @@ def _rows(df):
     return sorted(
         tuple(r) for r in df.collect()
     )
-
-
-def test_extents_count_partitions_result_invariant(spark):
-    df = spark.createDataFrame(EXTENT_DOCS, _DOC_SCHEMA)
-    base = _rows(maximal_duplicated_extents(df, k=3, w_cap=6))
-    assert base, "fixture must produce extents"
-    for kwargs in (
-        {"count_partitions": 1},
-        {"count_partitions": 5},
-        {"sort_partitions": 3, "count_partitions": 4},
-    ):
-        got = _rows(maximal_duplicated_extents(df, k=3, w_cap=6, **kwargs))
-        assert got == base, kwargs
-    # generic min_count path too (two-window variant)
-    base3 = _rows(
-        maximal_duplicated_extents(df, k=3, w_cap=6, min_count=3)
-    )
-    got3 = _rows(
-        maximal_duplicated_extents(
-            df, k=3, w_cap=6, min_count=3, count_partitions=3
-        )
-    )
-    assert got3 == base3
-
-
-SPAN_DOCS = [
-    (1, "the same old footer text here and unique alpha words"),
-    (2, "other page body the same old footer text here trailing"),
-    (3, "third page the same old footer text here more stuff"),
-    (4, "totally unrelated content nothing shared at all"),
-    (5, ""),
-    (6, None),
-]
-
-
-def test_span_dedup_releases_cache_in_operator(spark):
-    df = spark.createDataFrame(SPAN_DOCS, _DOC_SCHEMA)
-    spark.catalog.clearCache()
-    out = remove_duplicated_spans(df, n=3, max_docs=2)
-    rows = {r.doc_id: r for r in out.collect()}
-    # the shared footer span is removed from all three carriers
-    for i in (1, 2, 3):
-        assert "same old footer text here" not in (rows[i].clean_text or "")
-        assert rows[i].n_removed > 0
-    assert rows[4].clean_text == SPAN_DOCS[3][1]
-    assert rows[5].clean_text == "" and rows[5].n_removed == 0
-    assert rows[6].clean_text is None and rows[6].n_kept == 0
-    # VERDICT r12 item 7's 'Done' check: no InMemoryRelation outlives
-    # the call — the SQL cache manager must be empty (the r12 shape
-    # left g2 pinned until the caller's clearCache()).
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-    # the returned plan stays re-runnable after the internal unpersist
-    assert {r.doc_id: r.n_removed for r in out.collect()} == {
-        i: rows[i].n_removed for i in rows
-    }
 
 
 GOPHER_DOCS = [

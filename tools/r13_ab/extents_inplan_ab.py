@@ -6,11 +6,12 @@ default 32 except inside the scoped context manager):
 
   scoped128   with scoped_shuffle_partitions(spark, 128): default op
               (the r12 recipe — 92.6 s at 2M on r12's box)
-  inplan      maximal_duplicated_extents(sort_partitions=128,
-              count_partitions=128) under conf 32 — every exchange the
-              recipe widened, widened in-plan
   count_only  count_partitions=128 alone under conf 32 — attributes
               how much of the win is the hot-count aggregate's width
+
+A third arm also widened the two window exchanges (``sort_partitions``);
+it measured 85.6 s against count_only's 83.6 s at 2M docs, and the knob
+was deleted (OPTIMIZATION_r13.md §1).
 
 Usage: python tools/r13_ab/extents_inplan_ab.py [n_docs] [rounds]
 """
@@ -63,26 +64,15 @@ def main() -> None:
             noop(maximal_duplicated_extents(docs))
         return time.perf_counter() - t0
 
-    def run_inplan():
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        noop(
-            maximal_duplicated_extents(
-                docs, sort_partitions=128, count_partitions=128
-            )
-        )
-        return time.perf_counter() - t0
-
     def run_count_only():
         spark.catalog.clearCache()
         t0 = time.perf_counter()
         noop(maximal_duplicated_extents(docs, count_partitions=128))
         return time.perf_counter() - t0
 
-    res = {"scoped128": [], "inplan128": [], "count_only128": []}
+    res = {"scoped128": [], "count_only128": []}
     for _ in range(ROUNDS):
         res["scoped128"].append(round(run_scoped128(), 2))
-        res["inplan128"].append(round(run_inplan(), 2))
         res["count_only128"].append(round(run_count_only(), 2))
         print(json.dumps(res), file=sys.stderr)
     print(
